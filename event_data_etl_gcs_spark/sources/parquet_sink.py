@@ -70,8 +70,6 @@ def write_parquet_table(
         # dir and skips the _SUCCESS marker; re-emit it so downstream
         # loads keep their commit gate (plans/runner.py is_load_ready).
         # The write HAS committed once writer.parquet() returns.
-        import os
-
         if os.path.isdir(path) and not os.path.exists(
             os.path.join(path, "_SUCCESS")
         ):
@@ -120,8 +118,6 @@ def compact_parquet_dir(
     format when concurrent readers matter).
     """
     import glob
-    import os
-    import shutil
 
     files = glob.glob(os.path.join(path, "*.parquet"))
     total_bytes = sum(os.path.getsize(f) for f in files)
@@ -311,8 +307,6 @@ def delete_where(
        explicitly (the table-format equivalent is a delete manifest).
 
     Returns the number of rows deleted."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(table_dir)

@@ -18,7 +18,13 @@ dags/sparkify_dag.py:137-143). The engine-native equivalent
     (replaying a backlog can deliver an event twice at-least-once).
   * ``foreachBatch`` — one pass over each micro-batch fans out to all
     dimension tables (the reference re-scanned its input per table,
-    SURVEY.md §4.3-4).
+    SURVEY.md §4.3-4). A batch that yields no rows writes nothing: the
+    watermark's no-data batch, which follows every data batch that moves
+    the watermark, only runs its plan so the dedup state commits.
+  * Each dimension table is merged in one write: the merged frame goes to
+    a sibling directory that is then swapped in by rename, so the old
+    table stays whole until the new one is complete, and a replay after a
+    crash mid-swap first puts the last complete table back.
 
 At scale: state is bounded by the watermark horizon; output uses dynamic
 partition overwrite so replays only rewrite touched partitions; file
@@ -28,6 +34,7 @@ discovery cost is bounded with maxFilesPerTrigger.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -126,19 +133,41 @@ def run_incremental_available_now(
         stale and a fresh row in an append-log, and time rows sharing a
         truncated second across batches would duplicate. Late-arriving
         older state still wins for users (updates replace on key), the
-        same posture as the reference's overwrite job. localCheckpoint
-        materializes the merge so the overwrite of the path being read
-        is safe."""
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            existing = new_df.sparkSession.read.parquet(path)
-            out = merge_upsert(existing, new_df, keys).localCheckpoint(eager=True)
-        else:
-            out = new_df
-        write_parquet_table(out, path, partition_by=partition_by, mode="overwrite")
+        same posture as the reference's overwrite job.
+
+        The merged frame reads ``path`` with the batch's known schema (no
+        inference job) and is written once into ``<path>.__merge_new__``,
+        which then replaces ``path`` by rename, as compact_parquet_dir
+        does; no checkpoint of the merge is needed. On entry, a swap a
+        crash interrupted is repaired: a table moved aside is moved back
+        (or dropped, if the new one was already in place) and a stale new
+        directory is removed, so the replayed batch merges into the last
+        complete table."""
+        new, old = f"{path}.__merge_new__", f"{path}.__merge_old__"
+        if os.path.isdir(old):
+            if os.path.exists(path):
+                shutil.rmtree(old)
+            else:
+                os.rename(old, path)
+        shutil.rmtree(new, ignore_errors=True)
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            write_parquet_table(new_df, path, partition_by=partition_by, mode="overwrite")
+            return
+        existing = new_df.sparkSession.read.schema(new_df.schema).parquet(path)
+        merged = merge_upsert(existing, new_df, keys)
+        write_parquet_table(merged, new, partition_by=partition_by, mode="overwrite")
+        os.rename(path, old)
+        os.rename(new, path)
+        shutil.rmtree(old)
 
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()
         try:
+            # One action runs the batch plan, so the dedup state commits
+            # and the watermark evicts even when no row comes out; an empty
+            # batch (the watermark's no-data batch) then touches no table.
+            if batch_df.count() == 0:
+                return
             merge_write(
                 build_users(batch_df),
                 os.path.join(output_dir, "users"),
@@ -190,8 +219,6 @@ def run_streaming_merge_into(
     from ..sources.parquet_sink import merge_into
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         src = batch_df
         if latest_col is not None:
             w = Window.partitionBy(*key_cols).orderBy(
@@ -202,7 +229,11 @@ def run_streaming_merge_into(
                 .filter("__rn = 1")
                 .drop("__rn")
             )
-        src = src.localCheckpoint(eager=True)  # the write rewrites its own input path
+        # The write rewrites its own input path. Checkpoint first, so the
+        # batch plan runs once and the emptiness test reads the checkpoint.
+        src = src.localCheckpoint(eager=True)
+        if src.isEmpty():
+            return
         if os.path.exists(os.path.join(table_dir, "_SUCCESS")) or any(
             p.startswith(f"{partition_col}=")
             for p in (os.listdir(table_dir) if os.path.isdir(table_dir) else [])

@@ -1,159 +1,9 @@
-"""Structured-Streaming incremental mode: Available-Now drain, exactly-once
-file bookkeeping across restarts, cross-batch dedup within the watermark."""
+"""Streaming kNN-graph maintenance: batch-split invariance, equality
+with the batch build, idempotent replay and crash-atomic state commits.
+The Sparkify incremental drain's tests are in
+test_sparkify_incremental.py, in the default tier."""
 
 from __future__ import annotations
-
-import json
-
-from event_data_etl_gcs_spark.streaming.incremental import (
-    run_incremental_available_now,
-)
-
-from .test_sparkify_pipeline import MS, T0, _log_row
-
-
-def _write_file(d, name, rows):
-    (d / name).write_text("\n".join(json.dumps(r) for r in rows))
-
-
-def test_available_now_incremental(spark, tmp_path):
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    out = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write_file(
-        raw, "f1.json",
-        [
-            _log_row(ts=T0, userId="u1", level="free"),
-            _log_row(ts=T0 + 60 * MS, userId="u1", level="paid", itemInSession=1),
-            _log_row(ts=T0, userId="u2", page="Home"),  # filtered
-        ],
-    )
-    run_incremental_available_now(spark, str(raw), out, ckpt)
-    users1 = spark.read.parquet(f"{out}/users")
-    assert users1.count() == 1  # u1 latest within the batch
-    assert users1.collect()[0].level == "paid"
-    time1 = spark.read.parquet(f"{out}/time").count()
-    assert time1 == 2
-
-    # Second run: one NEW file (plus an exact duplicate event of f1 that
-    # the watermarked dropDuplicates must swallow within the run).
-    _write_file(
-        raw, "f2.json",
-        [
-            _log_row(ts=T0 + 120 * MS, userId="u3", level="free", itemInSession=2),
-            _log_row(ts=T0 + 120 * MS, userId="u3", level="free", itemInSession=2),
-        ],
-    )
-    run_incremental_available_now(spark, str(raw), out, ckpt)
-    users2 = spark.read.parquet(f"{out}/users")
-    # f1 NOT reprocessed (checkpoint): still one u1 row, plus one u3 row
-    assert users2.count() == 2
-    assert {r.user_id for r in users2.collect()} == {"u1", "u3"}
-    # duplicate event deduped -> exactly one new time row
-    assert spark.read.parquet(f"{out}/time").count() == 3
-
-
-def test_dedup_within_watermark_collapses_resends(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: the same logical event re-sent with
-    a slightly different timestamp still collapses (keys exclude ts)."""
-    raw = tmp_path / "raw2"
-    raw.mkdir()
-    out = str(tmp_path / "wh2")
-    ckpt = str(tmp_path / "ckpt2")
-    _write_file(
-        raw, "f1.json",
-        [
-            _log_row(ts=T0, userId="u1", sessionId=1, itemInSession=0),
-            # resend of the same (user, session, item) 5s later
-            _log_row(ts=T0 + 5 * MS, userId="u1", sessionId=1, itemInSession=0),
-        ],
-    )
-    run_incremental_available_now(
-        spark, str(raw), out, ckpt, dedup_within_watermark=True
-    )
-    # one logical event -> one time row (plain dropDuplicates would keep 2)
-    assert spark.read.parquet(f"{out}/time").count() == 1
-
-
-def test_same_user_across_runs_upserts_not_appends(spark, tmp_path):
-    """A user appearing in two separate runs must end with ONE row
-    carrying the newest state (per-batch merge into the table), not a
-    stale row beside a fresh one; a time row sharing its truncated
-    second across runs must not duplicate."""
-    raw = tmp_path / "raw3"
-    raw.mkdir()
-    out = str(tmp_path / "wh3")
-    ckpt = str(tmp_path / "ckpt3")
-
-    _write_file(raw, "f1.json", [_log_row(ts=T0, userId="u1", level="free")])
-    run_incremental_available_now(spark, str(raw), out, ckpt)
-
-    # run 2: same user upgraded, same truncated second as an f1 event
-    _write_file(
-        raw, "f2.json",
-        [
-            _log_row(ts=T0 + 500, userId="u1", level="paid", itemInSession=1),
-            # same second as f1's event (ts differs by <1s) -> same time row
-        ],
-    )
-    run_incremental_available_now(spark, str(raw), out, ckpt)
-
-    users = spark.read.parquet(f"{out}/users").collect()
-    assert len(users) == 1, users  # no stale 'free' row beside 'paid'
-    assert users[0].level == "paid"
-    # both events truncate to the same second -> exactly one time row
-    assert spark.read.parquet(f"{out}/time").count() == 1
-
-
-def test_fact_append_is_exactly_once_across_replay(spark, tmp_path):
-    """Crash-replay semantics: re-processing the SAME files (checkpoint
-    wiped, so the source re-delivers every batch with the same ids) must
-    leave the fact table bit-identical — the batch-id partition overwrite
-    absorbs the replay instead of appending duplicates."""
-    import shutil
-
-    from event_data_etl_gcs_spark.streaming.incremental import idempotent_append
-
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    out = str(tmp_path / "warehouse")
-    ckpt = str(tmp_path / "ckpt")
-    fact = str(tmp_path / "fact")
-
-    _write_file(
-        raw, "f1.json",
-        [
-            _log_row(ts=T0, userId="u1", level="free"),
-            _log_row(ts=T0 + 60 * MS, userId="u1", level="paid", itemInSession=1),
-        ],
-    )
-    run_incremental_available_now(spark, str(raw), out, ckpt, fact_dir=fact)
-    first = spark.read.parquet(fact)
-    n1 = first.count()
-    assert n1 == 2
-
-    # full replay: same files, fresh checkpoint -> same batch ids again
-    shutil.rmtree(ckpt)
-    run_incremental_available_now(spark, str(raw), out, ckpt, fact_dir=fact)
-    again = spark.read.parquet(fact)
-    assert again.count() == n1
-    assert {r.userId for r in again.collect()} == {"u1"}
-
-    # a genuinely new file still APPENDS (new batch id -> new partition)
-    _write_file(raw, "f2.json", [_log_row(ts=T0 + 7200 * MS, userId="u9")])
-    run_incremental_available_now(spark, str(raw), out, ckpt, fact_dir=fact)
-    assert spark.read.parquet(fact).count() == n1 + 1
-
-    # unit: double-delivery of one batch id is a no-op on row counts
-    df = spark.range(5).withColumnRenamed("id", "v")
-    p = str(tmp_path / "unit_fact")
-    idempotent_append(df, p, batch_id=0)
-    idempotent_append(df, p, batch_id=0)
-    assert spark.read.parquet(p).count() == 5
-    idempotent_append(df, p, batch_id=1)
-    assert spark.read.parquet(p).count() == 10
 
 
 def test_streaming_knn_maintenance_equals_batch_build(spark, tmp_path):
