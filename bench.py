@@ -12,7 +12,12 @@ count() did (judge-measured undercounts at sf0.1: train_test_split
 9.5x, extract_text 5.3x, dedup_simhash 4.4x). Only the one checksum
 row reaches the driver — we still measure engine time, not IPC. The
 pre-r12 count() numbers are NOT comparable for map-only rows; the
-old-vs-new attribution table lives in BUILDER_NOTES.md (round 12)."""
+old-vs-new attribution table lives in BUILDER_NOTES.md (round 12).
+
+This is the per-query timing harness at a testdata scale factor. The
+repository benchmark, with bounded end-to-end metrics, per-layer traces
+and the A/B rule for speed claims, is ``perfbench/`` as declared in
+``BENCHMARK.json`` (see ``perfbench/README.md``)."""
 
 from __future__ import annotations
 
@@ -133,9 +138,10 @@ def main() -> None:
     spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
 
     # several runs per query, report the min: run 1 pays JVM JIT + codegen
-    # warmup, later runs are the engine's steady-state throughput. Three
-    # timed runs (ADVICE r4) cut min-of-2 scheduler noise that made
-    # unchanged queries drift ±11% between rounds.
+    # warmup, later runs are the engine's steady-state throughput and reuse
+    # the classes run 1 generated (the session's codegen cache holds 1000
+    # entries, see session.py). Three timed runs (ADVICE r4) cut min-of-2
+    # scheduler noise that made unchanged queries drift ±11% between rounds.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # Heavy rows converge instead of stopping at a fixed count (VERDICT
     # r10 #3): a >2 s query still descending at run 3 records an upper

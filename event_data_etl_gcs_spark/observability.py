@@ -15,13 +15,19 @@ Summary numbers worth alerting on:
   * ``shuffle_bytes`` — the unit of interconnect pain at 100 TB.
   * ``spill_bytes`` — nonzero means executor memory no longer fits the
     partitions; repartition or bump shuffle partitions.
+
+``codegen_stats`` answers a JVM-side question the plan metrics cannot:
+is this session recompiling generated code? Take a snapshot before and
+after a piece of work and subtract; a repeated op that still shows
+Janino compiles has outgrown ``spark.sql.codegen.cache.maxEntries``
+(session.py).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _KEEP = (
     "numOutputRows",
@@ -108,3 +114,43 @@ def run_with_metrics(df: DataFrame) -> tuple[int, PlanMetrics]:
     output."""
     n = len(df.collect())
     return n, collect_plan_metrics(df)
+
+
+@dataclass(frozen=True)
+class CodegenStats:
+    """Cumulative code-generation and JIT counters of the driver JVM (in
+    local mode executors share it; on a cluster, executor-side compiles
+    are not counted). ``after - before`` gives the counts of the work in
+    between."""
+
+    compiles: int  # Janino compiles: misses of the generated-class cache
+    compile_ms: float  # wall time spent in those compiles
+    # bytecode of the classes they produced: class count x the mean of
+    # CodegenMetrics' sampled size histogram, an estimate once past its
+    # 1028 samples
+    bytecode_bytes: int
+    jit_ms: int  # HotSpot JIT compile time, all compiler threads
+    classes_loaded: int  # classes the JVM has loaded, generated ones included
+
+    def __sub__(self, other: "CodegenStats") -> "CodegenStats":
+        return CodegenStats(
+            *(getattr(self, f.name) - getattr(other, f.name) for f in fields(self))
+        )
+
+
+def codegen_stats(spark: SparkSession) -> CodegenStats:
+    """Snapshot of the JVM's codegen counters (``CodegenMetrics``,
+    ``CodeGenerator.compileTime``) and its JIT and class-loading MXBeans."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_time = metrics.METRIC_COMPILATION_TIME()
+    class_size = metrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE()
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    mx = jvm.java.lang.management.ManagementFactory
+    return CodegenStats(
+        compiles=compile_time.getCount(),
+        compile_ms=generator.compileTime() / 1e6,  # kept in nanoseconds
+        bytecode_bytes=round(class_size.getCount() * class_size.getSnapshot().getMean()),
+        jit_ms=mx.getCompilationMXBean().getTotalCompilationTime(),
+        classes_loaded=mx.getClassLoadingMXBean().getTotalLoadedClassCount(),
+    )

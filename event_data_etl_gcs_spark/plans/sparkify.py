@@ -198,9 +198,13 @@ def run_pipeline(
     }
     if partition_overrides:
         partitioning.update(partition_overrides)
-    for name, df in res.tables.items():
-        path = os.path.join(output_dir, name)
-        write_parquet_table(df, path, partition_by=partitioning[name])
-        res.paths[name] = path
-    events.unpersist()
+    # A failed write must not leave the event frame cached for the rest
+    # of the session.
+    try:
+        for name, df in res.tables.items():
+            path = os.path.join(output_dir, name)
+            write_parquet_table(df, path, partition_by=partitioning[name])
+            res.paths[name] = path
+    finally:
+        events.unpersist()
     return res

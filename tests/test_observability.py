@@ -1,15 +1,30 @@
 """Plan-metrics observability: the reported numbers must reflect what
 the plan actually did — scans report files/bytes/rows, shuffles report
-bytes, map-only plans report zero shuffle, pruned scans read less."""
+bytes, map-only plans report zero shuffle, pruned scans read less. Codegen
+counters show whether a repeated workload recompiles its generated code."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from event_data_etl_gcs_spark.observability import run_with_metrics
+from event_data_etl_gcs_spark.observability import codegen_stats, run_with_metrics
+from event_data_etl_gcs_spark.plans.sparkify import run_pipeline
+from event_data_etl_gcs_spark.queries import all_queries
 from event_data_etl_gcs_spark.sources.catalog import load_table
 
+from .test_sparkify_pipeline import fixture_dir  # noqa: F401  (pytest fixture)
+
 SF = "/root/testdata/sf0.001"
+
+# Registry queries replayed after the Sparkify pipeline in the codegen pin.
+REPLAY_QUERIES = (
+    "q1_pricing_summary",
+    "q3_top_orders",
+    "q5_nation_revenue",
+    "sessionize",
+    "users_latest",
+    "tumbling_window_counts",
+)
 
 
 def test_agg_query_reports_scan_and_shuffle(spark):
@@ -88,3 +103,35 @@ def test_observe_quality_gate_trips(spark):
         raise RuntimeError("gate should have tripped")
     except AssertionError as e:
         assert "null_s" in str(e)
+
+
+def _replay(spark, src, out):
+    run_pipeline(
+        spark,
+        song_data_path=f"{src}/song_data.json",
+        log_data_path=f"{src}/log_data.json",
+        output_dir=out,
+    )
+    specs = all_queries()
+    for name in REPLAY_QUERIES:
+        specs[name].fn(spark, SF).collect()
+
+
+def test_session_pins_codegen_cache_size(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_repeated_workload_reuses_generated_classes(spark, fixture_dir, tmp_path):  # noqa: F811
+    """The Sparkify pipeline plus a few registry queries generate more
+    classes than Spark's default codegen cache (100 entries) holds, so a
+    second replay under that default recompiles; under the session's pinned
+    size it compiles nothing. In a fresh session the first replay compiles
+    163 classes, and each later one 159 under the default size."""
+    out = str(tmp_path / "wh")
+    before = codegen_stats(spark)
+    _replay(spark, fixture_dir, out)
+    first = codegen_stats(spark)
+    _replay(spark, fixture_dir, out)
+    second = codegen_stats(spark) - first
+    assert second.compiles == 0, (first - before, second)
+    assert second.compile_ms == 0 and second.bytecode_bytes == 0

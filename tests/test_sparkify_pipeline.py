@@ -160,6 +160,37 @@ def test_incremental_log_only_mode(spark, fixture_dir, tmp_path):
     assert set(res.tables) == {"users", "time"}
 
 
+def test_failed_write_releases_event_cache(spark, fixture_dir, tmp_path, monkeypatch):
+    """run_pipeline caches the filtered event frame; a write that raises
+    part-way must still unpersist it, or it stays cached for the rest of
+    the session."""
+    from pyspark import StorageLevel
+
+    from event_data_etl_gcs_spark.plans import sparkify
+
+    written = []
+
+    def fail_second(df, path, partition_by=None):
+        if written:
+            raise OSError("disk full")
+        written.append(path)
+
+    monkeypatch.setattr(sparkify, "write_parquet_table", fail_second)
+    log_path = f"{fixture_dir}/log_data.json"
+    with pytest.raises(OSError, match="disk full"):
+        run_pipeline(
+            spark,
+            song_data_path=f"{fixture_dir}/song_data.json",
+            log_data_path=log_path,
+            output_dir=str(tmp_path / "out"),
+        )
+    assert len(written) == 1
+    # the cache manager matches frames by plan: a rebuilt event frame
+    # finds no cached entry
+    events = next_song_events(load_log_data(spark, log_path))
+    assert events.storageLevel == StorageLevel.NONE
+
+
 def test_corrupt_records_dead_letter(spark, tmp_path):
     p = tmp_path / "bad.json"
     good = json.dumps(_log_row(userId="ok"))
