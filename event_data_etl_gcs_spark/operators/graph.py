@@ -620,88 +620,33 @@ def derive_band_bits(n: int, target_occupancy: int = KNN_ANN_TARGET_OCCUPANCY) -
     return max(4, math.ceil(math.log2(n / target_occupancy)))
 
 
-def _plane_fold_sql(j: int) -> str:
-    """Interpreted-HOF signed projection of plane ``j`` over the
-    ``embedding`` column (the pre-round-13 spelling, kept as the
-    any-width fallback)."""
+def _plane_dot_sql(j_expr: str) -> str:
+    """Raw (unsigned) projection of ``embedding`` onto the deterministic
+    +/-1 direction of plane ``j_expr`` — the interpreted-HOF fold,
+    bit-portable with the DuckDB mirror. ``j_expr`` is SQL: a plane
+    index literal for the bucket bits (Catalyst folds the constant
+    ``(j + 1) * C1`` to one literal), or a per-row expression for the
+    band-dependent ring ordering."""
     from .similarity import LSH_C1, LSH_C2, LSH_HALF, LSH_MOD
 
     # constants as LONG literals: ANSI mode errors on the int32
     # overflow of (j+1)*C1 + (i-1)*C2 otherwise (BUILDER_NOTES)
     sign = (
-        f"(CASE WHEN (({j + 1}L * {LSH_C1}L + (i - 1) * {LSH_C2}L) % {LSH_MOD}L)"
-        f" < {LSH_HALF}L THEN 1 ELSE -1 END)"
-    )
-    return (
-        "aggregate(transform(sequence(1, size(embedding)), "
-        f"i -> {sign} * CAST(embedding[i - 1] AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-
-
-def _plane_proj_sql(j: int, unroll: bool) -> str:
-    """Signed projection of plane ``j`` — the fold, or (round 13,
-    VERDICT r12 #2) the size()-guarded unrolled add/subtract chain:
-    every (plane, dim) sign is a compile-time constant, so the fixed
-    64-dim width collapses to plain codegen-able arithmetic with the
-    SAME left-to-right evaluation order (bit-identical; multiplying by
-    ±1 is an exact identity/negation, a-b == a+(-b) in IEEE)."""
-    fold = _plane_fold_sql(j)
-    if not unroll:
-        return fold
-    from .similarity import PLANE_UNROLL_DIM, plane_dot_chain_sql
-
-    return (
-        f"(CASE WHEN size(embedding) = {PLANE_UNROLL_DIM} "
-        f"THEN {plane_dot_chain_sql(j, 'embedding')} ELSE {fold} END)"
-    )
-
-
-def _plane_bits_sql(planes: list[int], unroll: bool = False) -> str:
-    """Packed sign bits of the deterministic SRP planes (JVM fold —
-    bit-portable with the DuckDB mirror; ``unroll=True`` swaps each
-    fold for the codegen-able constant-sign chain, same bits)."""
-    bits = [
-        f"(CASE WHEN {_plane_proj_sql(j, unroll)} > 0 THEN {1 << b}L ELSE 0L END)"
-        for b, j in enumerate(planes)
-    ]
-    return " + ".join(bits)
-
-
-def _plane_dot_sql(j_expr: str, j_values: list[int] | None = None) -> str:
-    """Raw (unsigned) projection onto the deterministic +/-1 direction
-    of plane ``j_expr`` — same sign family as the bucket planes, but the
-    CONTINUOUS value, and the plane index may be a per-row SQL
-    expression (band-dependent ordering).
-
-    ``j_values`` (round 13): when the caller knows the finite set of
-    plane indices ``j_expr`` can take (one per band), the projection
-    dispatches through a CASE to the per-plane unrolled constant-sign
-    chain — codegen-able, bit-identical (same guard/fallback story as
-    :func:`_plane_proj_sql`)."""
-    from .similarity import LSH_C1, LSH_C2, LSH_HALF, LSH_MOD
-
-    sign = (
         f"(CASE WHEN ((({j_expr} + 1) * {LSH_C1}L + (i - 1) * {LSH_C2}L)"
         f" % {LSH_MOD}L) < {LSH_HALF}L THEN 1 ELSE -1 END)"
     )
-    fold = (
+    return (
         "aggregate(transform(sequence(1, size(embedding)), "
         f"i -> {sign} * CAST(embedding[i - 1] AS DOUBLE)), "
         "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
     )
-    if not j_values:
-        return fold
-    from .similarity import PLANE_UNROLL_DIM, plane_dot_chain_sql
 
-    branches = " ".join(
-        f"WHEN {j} THEN {plane_dot_chain_sql(j, 'embedding')}"
-        for j in j_values
-    )
-    return (
-        f"(CASE WHEN size(embedding) = {PLANE_UNROLL_DIM} "
-        f"THEN (CASE ({j_expr}) {branches} ELSE {fold} END) "
-        f"ELSE {fold} END)"
+
+def _plane_bits_sql(planes: list[int]) -> str:
+    """Packed sign bits of the deterministic SRP planes."""
+    return " + ".join(
+        f"(CASE WHEN {_plane_dot_sql(str(j))} > 0 THEN {1 << b}L ELSE 0L END)"
+        for b, j in enumerate(planes)
     )
 
 
@@ -711,7 +656,6 @@ def banded_srp_candidates(
     band_bits: int | None = None,
     max_bucket: int | None = KNN_ANN_MAX_BUCKET,
     ring_cap: int | None = KNN_ANN_RING_CAP,
-    unroll_planes: bool = False,
 ) -> DataFrame:
     """Distinct candidate pairs (ida < idb) from banded random-hyperplane
     LSH over ``base`` (columns: id, embedding) — the shared candidate
@@ -721,27 +665,6 @@ def banded_srp_candidates(
     :func:`knn_edges_ann` for the full semantics discussion."""
     if band_bits is None:
         band_bits = derive_band_bits(base.count())
-
-    def band_bucket_sql(band: int) -> str:
-        return _plane_bits_sql(
-            [band * band_bits + b for b in range(band_bits)],
-            unroll=unroll_planes,
-        )
-
-    banded = base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.expr(band_bucket_sql(band)).cast("int").alias("bkt"),
-                    )
-                    for band in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bkt")
     # The signature table is referenced by SEVERAL downstream plans (the
     # bucket-size aggregate, the size join, and the exact/ring pair
     # branches); without a persist each reference recomputes all
@@ -750,7 +673,9 @@ def banded_srp_candidates(
     # skinny (id, band, bkt — ~24 B x n x n_bands; MEMORY_AND_DISK
     # spills rather than OOMs at 100 TB scale), the arrays stay behind.
     # Tracked for release on the next build (see _ANN_CACHES above).
-    banded = _track_ann_cache(banded.persist())
+    banded = _track_ann_cache(
+        banded_signature_table(base, n_bands, band_bits).persist()
+    )
 
     def exact_pairs(members: DataFrame) -> DataFrame:
         a = members.alias("a")
@@ -780,14 +705,7 @@ def banded_srp_candidates(
         # symmetrize covers both directions.
         if cap < 1:
             raise ValueError(f"ring_cap must be >= 1, got {cap}")
-        proj = _plane_dot_sql(
-            "(CAST(band AS INT) + " f"{n_bands * band_bits})",
-            j_values=(
-                [n_bands * band_bits + b for b in range(n_bands)]
-                if unroll_planes
-                else None
-            ),
-        )
+        proj = _plane_dot_sql(f"(CAST(band AS INT) + {n_bands * band_bits})")
         wpos = Window.partitionBy("band", "bkt").orderBy("proj", "id")
         wall = Window.partitionBy("band", "bkt")
         # `pos` feeds BOTH sides of the ring equi-join below; persist the
@@ -874,7 +792,7 @@ def _numpy_banded_signatures(
 ) -> DataFrame:
     """Banded SRP signatures + ring projection via one vectorized Arrow
     pass (``mapInPandas``) — the bucket-path counterpart of the JVM
-    fold expressions in :func:`banded_srp_candidates`.
+    fold expressions in :func:`banded_signature_table`.
 
     Emits n_bands rows per input row: (id, embedding, nrm, band, bkt,
     proj). Same deterministic +/-1 planes as the fold path — sign(j, i)

@@ -103,66 +103,22 @@ def duck_norm(a: str) -> str:
     return f"sqrt({duck_dot(a, a)})"
 
 
-# Fixed width unrolled in the plane-sign expressions: the embeddings
-# fixture is 64-dim at every SF. Other widths fall back to the fold.
-PLANE_UNROLL_DIM = 64
-
-
-def plane_signs(j: int, dim: int = PLANE_UNROLL_DIM) -> list[int]:
-    """The deterministic ±1 signs of plane ``j`` for dims 0..dim-1 —
-    the Python-side constant fold of the SQL sign CASE."""
-    base = (j + 1) * LSH_C1
-    return [
-        1 if (base + d * LSH_C2) % LSH_MOD < LSH_HALF else -1
-        for d in range(dim)
-    ]
-
-
-def plane_dot_chain_sql(j: int, vec: str, dim: int = PLANE_UNROLL_DIM) -> str:
-    """Explicitly left-associated unrolled signed sum
-    ``(((0 + v[0]) - v[1]) + ...)`` for plane ``j`` over a ``dim``-wide
-    array column — plain codegen-able arithmetic with the SAME
-    evaluation order and floating-point result as the interpreted fold
-    (IEEE a-b == a+(-b); multiplying by the ±1 sign constant is an exact
-    identity/negation). Callers must guard with ``size(vec) = dim``."""
-    chain = "CAST(0 AS DOUBLE)"
-    for d, s in enumerate(plane_signs(j, dim)):
-        op = "+" if s > 0 else "-"
-        chain = f"({chain} {op} CAST({vec}[{d}] AS DOUBLE))"
-    return chain
-
-
-def hyperplane_sign_sql(j: int, vec: str, unroll: bool = False) -> str:
+def hyperplane_sign_sql(j: int, vec: str) -> str:
     """Spark SQL: sign of dot(vec, h_j) with the deterministic ±1 plane.
 
     The plane constant is precomputed in Python and emitted as a long
     literal — (j+1)*C1 + d*C2 overflows int32 (ANSI mode would error).
-
-    ``unroll=True`` (round 13, the §4.1 lever of VERDICT r12 #2): the
-    sign of every (plane, dim) pair is a compile-time constant, so for
-    the fixed 64-dim width the whole fold collapses to an unrolled
-    add/subtract chain — codegen-able instead of an interpreted
-    higher-order-function lambda, bit-identical output (size() guard
-    falls back to the fold for other widths). OPT-IN per call site like
-    dot_sql(unroll=): giant generated functions can regress past
-    codegen limits (the r12 semdedup lesson).
     """
     base = (j + 1) * LSH_C1
     # fold the sequence DIRECTLY (no intermediate transform() array):
     # same elements in the same left-to-right order — bit-identical to
     # the previous transform+aggregate spelling and the DuckDB mirror —
     # but one fewer 64-element array allocation per plane per row
-    fold = (
+    return (
         f"aggregate(sequence(1, size({vec})), CAST(0 AS DOUBLE), (acc, d) -> "
         f"acc + (CASE WHEN ({base}L + CAST(d - 1 AS BIGINT) * {LSH_C2}L) % {LSH_MOD} < {LSH_HALF} "
         f"THEN CAST(element_at({vec}, d) AS DOUBLE) "
         f"ELSE -CAST(element_at({vec}, d) AS DOUBLE) END))"
-    )
-    if not unroll:
-        return fold
-    return (
-        f"(CASE WHEN size({vec}) = {PLANE_UNROLL_DIM} "
-        f"THEN {plane_dot_chain_sql(j, vec)} ELSE {fold} END)"
     )
 
 
@@ -178,10 +134,10 @@ def duck_hyperplane_sign(j: int, vec: str) -> str:
     )
 
 
-def bucket_sql(vec: str, n_planes: int = LSH_PLANES, unroll: bool = False) -> str:
+def bucket_sql(vec: str, n_planes: int = LSH_PLANES) -> str:
     """LSH bucket id: n_planes sign bits packed into a long."""
     bits = " + ".join(
-        f"(CASE WHEN {hyperplane_sign_sql(j, vec, unroll=unroll)} > 0 "
+        f"(CASE WHEN {hyperplane_sign_sql(j, vec)} > 0 "
         f"THEN {1 << j}L ELSE 0L END)"
         for j in range(n_planes)
     )

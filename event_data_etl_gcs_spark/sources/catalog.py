@@ -110,7 +110,7 @@ def normalize_event_time(df: DataFrame, nano_cols: tuple[str, ...] = ()) -> Data
 # Fan-out floor: single-file tables below this size stay unsplit (tiny
 # dimension tables — nation/region/supplier — where a repartition would
 # only add scheduling overhead and delay broadcast builds).
-FANOUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 512 * 1024))
+FANOUT_MIN_BYTES = 512 * 1024
 
 
 def _fan_out(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
@@ -135,7 +135,7 @@ def _fan_out(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     keyed shuffle or extra pass is ever added at cluster scale. The
     round-robin exchange is deterministic (sortBeforeRepartition is on by
     default) and every registered query is partitioning-independent
-    (determinism audit). Disable with SPARK_GRAFT_FANOUT=off.
+    (determinism audit).
 
     OPT-IN per load site (round-12 measurement): fan-out pays exactly
     when the per-row map work below the first exchange is heavy (HTML
@@ -146,8 +146,6 @@ def _fan_out(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     3.8 -> 7.4, containment 2.1 -> 5.8, asof_join 0.70 -> 1.56 measured
     with it forced on globally). So the default is OFF and the measured
     map-heavy call sites pass fan_out=True."""
-    if os.environ.get("SPARK_GRAFT_FANOUT", "auto") == "off":
-        return df
     # Single-FILE tables only: a production table is a directory (many
     # files / row groups -> the scan already parallelizes), so the
     # isfile gate alone makes this a no-op at cluster scale. The scan

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -98,6 +99,72 @@ def export_jsonl(
     w.json(path)
 
 
+def _swap_dirs(path: str) -> tuple[str, str]:
+    path = path.rstrip("/")
+    return f"{path}.__merge_new__", f"{path}.__merge_old__"
+
+
+def repair_dir_swap(path: str) -> None:
+    """Undo what a crash left of :func:`swap_in_dir` on ``path``: a table
+    moved aside goes back (or is dropped, if the new one was already in
+    place) and a half-written new directory is removed, so a rerun
+    starts from the last complete table. Call it before reading
+    ``path``."""
+    new, old = _swap_dirs(path)
+    if os.path.isdir(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    shutil.rmtree(new, ignore_errors=True)
+
+
+def swap_in_dir(path: str, write: Callable[[str], None]) -> None:
+    """Replace directory ``path`` with what ``write(new)`` writes into
+    the sibling ``<path>.__merge_new__``: ``path`` moves aside to
+    ``<path>.__merge_old__``, the new directory takes its name, and the
+    old one is removed. Readers racing the swap see the old or the new
+    listing, not a mix (object-store caveat: rename is copy+delete there
+    — use a transactional table format when concurrent readers matter).
+    Every swap uses these two names, so :func:`repair_dir_swap` undoes a
+    crash between the steps whichever writer it interrupted."""
+    new, old = _swap_dirs(path)
+    write(new)
+    os.rename(path, old)
+    os.rename(new, path)
+    shutil.rmtree(old)
+
+
+def _parquet_files(path: str) -> list[str]:
+    """Data files of a table directory, through its partition levels.
+    Names starting with ``_`` or ``.`` are skipped, as Spark skips them."""
+    hidden = ("_", ".")
+    files = []
+    for d, subdirs, fs in os.walk(path):
+        subdirs[:] = [s for s in subdirs if not s.startswith(hidden)]
+        files += [
+            os.path.join(d, f)
+            for f in fs
+            if f.endswith(".parquet") and not f.startswith(hidden)
+        ]
+    return files
+
+
+def _partition_cols(path: str) -> list[str]:
+    """Hive partition columns of a table directory, outermost first, read
+    off the first ``col=value`` directory at each level."""
+    cols = []
+    while True:
+        parts = sorted(
+            e for e in os.listdir(path)
+            if "=" in e and os.path.isdir(os.path.join(path, e))
+        )
+        if not parts:
+            return cols
+        cols.append(parts[0].split("=", 1)[0])
+        path = os.path.join(path, parts[0])
+
+
 def compact_parquet_dir(
     spark,
     path: str,
@@ -110,29 +177,29 @@ def compact_parquet_dir(
     that degrade scan planning (footer reads) and kill read parallelism
     economics at cluster scale.
 
-    Sizing uses the directory's actual on-disk bytes, so compression
-    ratio is accounted for. Returns (files_before, files_after). The
-    rewrite goes through a temp dir + atomic-ish rename swap; readers
-    racing the swap see the old or new listing, not a mix (object-store
-    caveat: rename is copy+delete there — use a transactional table
-    format when concurrent readers matter).
+    Sizing uses the table's actual on-disk bytes (every partition level),
+    so compression ratio is accounted for. A Hive-partitioned table keeps
+    its ``col=value`` layout; rows are clustered by the partition columns
+    so each partition gets few files. Returns (files_before,
+    files_after). The rewrite is swapped in by :func:`swap_in_dir`, and a
+    compaction a crash interrupted is repaired on the next call.
     """
-    import glob
-
-    files = glob.glob(os.path.join(path, "*.parquet"))
+    repair_dir_swap(path)
+    files = _parquet_files(path)
     total_bytes = sum(os.path.getsize(f) for f in files)
     n_out = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    out = df.repartition(n_out)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    out.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__compact_old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len(files), n_out
+    swap_in_dir(
+        path,
+        lambda new: write_parquet_table(
+            df,
+            new,
+            partition_by=_partition_cols(path),
+            target_partitions=n_out,
+            sort_within_by=sort_within_by,
+        ),
+    )
+    return len(files), len(_parquet_files(path))
 
 
 def write_zordered(

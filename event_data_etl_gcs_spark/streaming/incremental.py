@@ -34,7 +34,6 @@ discovery cost is bounded with maxFilesPerTrigger.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +41,11 @@ from pyspark.sql import functions as F
 from ..functions.time import epoch_millis_to_timestamp
 from ..operators.upsert import merge_upsert
 from ..schemas import LOG_DATA_SCHEMA
-from ..sources.parquet_sink import write_parquet_table
+from ..sources.parquet_sink import (
+    repair_dir_swap,
+    swap_in_dir,
+    write_parquet_table,
+)
 
 
 def streaming_log_source(
@@ -137,28 +140,22 @@ def run_incremental_available_now(
 
         The merged frame reads ``path`` with the batch's known schema (no
         inference job) and is written once into ``<path>.__merge_new__``,
-        which then replaces ``path`` by rename, as compact_parquet_dir
-        does; no checkpoint of the merge is needed. On entry, a swap a
-        crash interrupted is repaired: a table moved aside is moved back
-        (or dropped, if the new one was already in place) and a stale new
-        directory is removed, so the replayed batch merges into the last
-        complete table."""
-        new, old = f"{path}.__merge_new__", f"{path}.__merge_old__"
-        if os.path.isdir(old):
-            if os.path.exists(path):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, path)
-        shutil.rmtree(new, ignore_errors=True)
+        which then replaces ``path`` by rename (parquet_sink.swap_in_dir);
+        no checkpoint of the merge is needed. On entry, a swap a crash
+        interrupted is repaired (parquet_sink.repair_dir_swap), so the
+        replayed batch merges into the last complete table."""
+        repair_dir_swap(path)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             write_parquet_table(new_df, path, partition_by=partition_by, mode="overwrite")
             return
         existing = new_df.sparkSession.read.schema(new_df.schema).parquet(path)
         merged = merge_upsert(existing, new_df, keys)
-        write_parquet_table(merged, new, partition_by=partition_by, mode="overwrite")
-        os.rename(path, old)
-        os.rename(new, path)
-        shutil.rmtree(old)
+        swap_in_dir(
+            path,
+            lambda new: write_parquet_table(
+                merged, new, partition_by=partition_by, mode="overwrite"
+            ),
+        )
 
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()

@@ -12,7 +12,6 @@ Contract pinned here:
     caller opts in — no exchange where a broadcast build would only be
     delayed (this is also why the sf0.001 map-only plan pins hold: every
     sf0.001 file sits below the floor);
-  * SPARK_GRAFT_FANOUT=off disables the rewrite globally;
   * results are unchanged (same rows either way — the exchange is
     round-robin, and every registered query is partitioning-independent
     per the determinism audit).
@@ -20,20 +19,13 @@ Contract pinned here:
 
 from __future__ import annotations
 
-import pytest
-
 from event_data_etl_gcs_spark.sources import catalog
 
 SF01 = "/root/testdata/sf0.1"
 SF0001 = "/root/testdata/sf0.001"
 
 
-@pytest.fixture()
-def fanout_env(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT", raising=False)
-
-
-def test_opt_in_large_single_file_fans_out(spark, fanout_env):
+def test_opt_in_large_single_file_fans_out(spark):
     df = catalog.load_table(spark, SF01, "documents", fan_out=True)
     assert (
         df.rdd.getNumPartitions()
@@ -41,12 +33,12 @@ def test_opt_in_large_single_file_fans_out(spark, fanout_env):
     )
 
 
-def test_default_is_raw_scan(spark, fanout_env):
+def test_default_is_raw_scan(spark):
     df = catalog.load_table(spark, SF01, "documents")
     assert df.rdd.getNumPartitions() == 1
 
 
-def test_tiny_table_keeps_raw_scan_even_opted_in(spark, fanout_env):
+def test_tiny_table_keeps_raw_scan_even_opted_in(spark):
     # nation.parquet is ~2.7 KB — far below the floor at every SF
     df = catalog.load_table(spark, SF01, "nation", fan_out=True)
     assert df.rdd.getNumPartitions() == 1
@@ -56,13 +48,7 @@ def test_tiny_table_keeps_raw_scan_even_opted_in(spark, fanout_env):
     assert small.rdd.getNumPartitions() == 1
 
 
-def test_fanout_off_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "off")
-    df = catalog.load_table(spark, SF01, "documents", fan_out=True)
-    assert df.rdd.getNumPartitions() == 1
-
-
-def test_fanout_preserves_rows(spark, fanout_env):
+def test_fanout_preserves_rows(spark):
     fanned = catalog.load_table(spark, SF01, "documents", fan_out=True)
     raw = catalog.load_table(spark, SF01, "documents")
     assert fanned.count() == raw.count()

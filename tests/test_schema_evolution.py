@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from event_data_etl_gcs_spark.sources.catalog import read_parquet_evolving
@@ -112,3 +115,54 @@ def test_compact_parquet_dir(spark, tmp_path):
     assert n_before == 64 and n_after < 16
     assert len(glob.glob(path + "/*.parquet")) == n_after
     assert spark.read.parquet(path).count() == before_rows
+
+    # A Hive-partitioned table (the Sparkify songs/time/songplays layout)
+    # is sized through its partition levels and keeps them.
+    part = str(tmp_path / "partitioned")
+    li.withColumn("year", F.year("l_shipdate")).repartition(8).write.partitionBy(
+        "year"
+    ).parquet(part)
+    years = sorted(e for e in os.listdir(part) if e.startswith("year="))
+    before = _sorted_rows(spark.read.parquet(part))
+    n_files = len(glob.glob(part + "/year=*/*.parquet"))
+    assert len(years) > 1 and n_files > len(years)
+
+    n_before, n_after = compact_parquet_dir(spark, part, target_file_mb=8)
+    assert n_before == n_files
+    assert sorted(e for e in os.listdir(part) if not e.startswith(".")) == ["_SUCCESS", *years]
+    assert n_after == len(glob.glob(part + "/year=*/*.parquet")) == len(years)
+    assert not glob.glob(part + "/*.parquet")
+    one_file = glob.glob(part + "/year=*/*.parquet")[0]
+    assert "year" not in spark.read.parquet(one_file).columns
+    assert _sorted_rows(spark.read.parquet(part)) == before
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+
+def test_compact_rerun_after_crash_between_renames(spark, tmp_path, monkeypatch):
+    """A crash after the table was moved aside but before the compacted
+    copy took its name leaves nothing at the path. The rerun puts the
+    old table back, compacts again and leaves no sibling directory."""
+    from event_data_etl_gcs_spark.sources.parquet_sink import compact_parquet_dir
+
+    path = str(tmp_path / "t")
+    spark.range(1000).withColumn("k", F.col("id") % 3).repartition(8).write.parquet(path)
+    before = _sorted_rows(spark.read.parquet(path))
+    real_rename = os.rename
+
+    def crash_once(src, dst):
+        if str(src).endswith(".__merge_new__"):
+            monkeypatch.setattr(os, "rename", real_rename)
+            raise OSError("crash between the renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_once)
+    with pytest.raises(OSError, match="crash between"):
+        compact_parquet_dir(spark, path, target_file_mb=8)
+    assert not os.path.exists(path)
+
+    assert compact_parquet_dir(spark, path, target_file_mb=8) == (8, 1)
+    assert _sorted_rows(spark.read.parquet(path)) == before
+    assert os.listdir(tmp_path) == ["t"]
