@@ -70,9 +70,3 @@ def stable_row_id(
         )
         .drop("__pid", "__mono", "__base", "__offset")
     )
-
-
-def content_hash_id(*cols: str) -> Column:
-    """Collision-resistant-enough 64-bit key from natural columns —
-    deterministic, shuffle-free, scales to any size."""
-    return F.xxhash64(*[F.col(c) for c in cols])

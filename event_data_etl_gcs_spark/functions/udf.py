@@ -34,18 +34,3 @@ def epoch_millis_to_timestamp_pudf():
         return pd.to_datetime((ms // 1000).astype("int64"), unit="s")
 
     return pandas_udf(convert, TimestampType())
-
-
-@lru_cache(maxsize=None)
-def zscore_pudf():
-    """Example numeric pandas UDF (per-batch z-score) — the template for
-    vectorized feature engineering; prefer native expressions when the
-    semantics allow."""
-
-    def zscore(v: pd.Series) -> pd.Series:
-        std = v.std(ddof=0)
-        if std == 0 or pd.isna(std):
-            return v * 0.0
-        return (v - v.mean()) / std
-
-    return pandas_udf(zscore, "double")

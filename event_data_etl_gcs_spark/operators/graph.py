@@ -437,11 +437,16 @@ PR_DAMP_NUM, PR_DAMP_DEN = 17, 20  # damping 0.85 as an exact rational
 # tiny shuffle stages whose scheduling dominates — collapse into one
 # numpy loop INSIDE a task. Integer floor arithmetic is summation-order
 # independent, so the result is bit-identical to the distributed loop
-# (pinned by tests/test_graph.py::test_pagerank_quantized_local_parity);
-# above the bound the shuffle loop is the only thing that scales and
-# runs unchanged. Same family of size switch as SCORING_FOLD_MAX_N and
-# the broadcast join-back bound.
+# (pinned by tests/test_pagerank_parity.py); above the bound the
+# shuffle loop is the only thing that scales and runs unchanged. Same
+# family of size switch as SCORING_FOLD_MAX_N and the broadcast
+# join-back bound. A few dense nodes can make a small node count carry
+# a huge edge list, so the edge count (sum of degree over the
+# symmetrized list) is bounded too: the one task holds about 60 bytes
+# per edge (the Arrow batches, u, v, both index arrays, contrib), so
+# 4M edges is about 250 MB of worker memory.
 PR_LOCAL_MAX_NODES = 65_536
+PR_LOCAL_MAX_EDGES = 1 << 22
 
 
 def _pagerank_quantized_local(
@@ -514,14 +519,15 @@ def pagerank_quantized(
     deg = sym.groupBy(F.col("u").alias("node")).agg(
         F.count("*").alias("degree")
     )
-    n_nodes = deg.count()
+    # one action for both size facts of the small-graph switch
+    n_nodes, n_edges = deg.agg(F.count("*"), F.sum("degree")).first()
     if n_nodes == 0:
         # empty edge list -> empty rank table (ADVICE r10 #3); the DuckDB
         # oracle agrees by construction (pr0 selects FROM the empty deg)
         return edges.sparkSession.createDataFrame(
             [], "node long, pr_scaled long, pagerank double"
         )
-    if n_nodes <= local_max_nodes:
+    if n_nodes <= local_max_nodes and n_edges <= PR_LOCAL_MAX_EDGES:
         # small-graph strategy (see PR_LOCAL_MAX_NODES): one Arrow task
         # replaces ~3 shuffle stages per iteration; bit-identical output.
         ranks = _pagerank_quantized_local(sym, n_nodes, iterations, scale)

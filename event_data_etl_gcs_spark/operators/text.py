@@ -107,11 +107,6 @@ def shingles_sql(tok_col: str, k: int = 3) -> str:
     )
 
 
-def shingle_hashes_sql(shingle_col: str) -> str:
-    """Distinct polynomial hashes of a shingle-array column."""
-    return f"array_distinct(transform({shingle_col}, s -> {char_hash_sql('s')}))"
-
-
 def shingle_hash_set_sql(text_col: str, k: int = 3) -> str:
     """Distinct k-token shingle hashes straight from a text column, as ONE
     expression with no subexpression duplication (let-bound stages).
@@ -182,10 +177,6 @@ def duck_shingles(tok_col: str, k: int = 3) -> str:
         f"list_transform(range(1, len({tok_col}) - {k - 2}), "
         f"i -> concat_ws(' ', {parts})) END"
     )
-
-
-def duck_shingle_hashes(shingle_col: str) -> str:
-    return f"list_distinct(list_transform({shingle_col}, s -> {duck_char_hash('s')}))"
 
 
 # =========================================================================

@@ -1,6 +1,5 @@
 """End-to-end training-data corpus pipeline: the composition the engine
-exists for at 100 TB — quality-filter -> exact-dedup -> near-dedup ->
-partitioned corpus.
+exists for at 100 TB — quality-filter -> exact-dedup -> near-dedup.
 
 Stages (each deterministic, so the whole pipeline has an exact oracle):
   1. quality gate — token/stopword/punctuation thresholds (map-only,
@@ -12,7 +11,6 @@ Stages (each deterministic, so the whole pipeline has an exact oracle):
      (keep-smallest policy; greedy but deterministic and one pass —
      transitive chains collapse to their minimum representative across
      reruns).
-  4. write partitioned by lang for downstream per-language sampling.
 """
 
 from __future__ import annotations
@@ -22,7 +20,6 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_lsh_pairs
 from ..operators.text import quality_columns, tokens_sql
-from ..sources.parquet_sink import write_parquet_table
 
 MIN_TOKENS = 20
 MAX_STOPWORD_RATIO = 0.6
@@ -63,15 +60,6 @@ def select_training_corpus(docs: DataFrame) -> DataFrame:
     unique = exact_dedup_keep_min(gated)
     survivors = near_dedup_keep_min(unique)
     return survivors.select("doc_id", "lang", "source", "n_tokens")
-
-
-def build_training_corpus(docs: DataFrame, output_path: str) -> DataFrame:
-    """Full pipeline incl. the partitioned write (lang partitions for
-    per-language downstream sampling)."""
-    survivors = near_dedup_keep_min(exact_dedup_keep_min(quality_gate(docs)))
-    out = survivors.select("doc_id", "text", "lang", "source", "n_tokens")
-    write_parquet_table(out, output_path, partition_by=["lang"])
-    return out
 
 
 def decontaminate(

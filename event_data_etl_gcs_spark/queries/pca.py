@@ -82,13 +82,6 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
     return (st.st_mtime_ns, st.st_size)
 
 
-def clear_fit_memo() -> None:
-    """Drop both fit memos (Spark-side and oracle-side) — for callers
-    that mutate a corpus in-process and want a guaranteed refit."""
-    _FIT_MEMO.clear()
-    _fit_from_parquet_fp.cache_clear()
-
-
 def _fit_spark(spark: SparkSession, sf_dir: str):
     key = (sf_dir, _corpus_fingerprint(sf_dir))
     if key not in _FIT_MEMO:

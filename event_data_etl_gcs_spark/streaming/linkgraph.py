@@ -107,17 +107,6 @@ def edges_merge(df: DataFrame) -> DataFrame:
     )
 
 
-def frontier_merge(df: DataFrame) -> DataFrame:
-    """Canned compaction reduction for the frontier state: SUM the
-    counters, MIN the first-doc per canonical URL. Sum-merged like
-    :func:`edges_merge` — compact only with ``checkpoint_dir``."""
-    return df.groupBy("canonical_url", "dst_host").agg(
-        F.sum("n_refs").cast("long").alias("n_refs"),
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.min("first_doc").alias("first_doc"),
-    )
-
-
 def read_crawl_frontier(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained frontier, batch partials folded — column-identical
     to the batch ``crawl_frontier`` over the union of deliveries."""
