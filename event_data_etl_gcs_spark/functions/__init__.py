@@ -1,8 +1,7 @@
-from .ids import monotonic_id, stable_row_id
+from .ids import stable_row_id
 from .time import epoch_millis_to_timestamp, time_dimension_columns
 
 __all__ = [
-    "monotonic_id",
     "stable_row_id",
     "epoch_millis_to_timestamp",
     "time_dimension_columns",

@@ -9,14 +9,8 @@ tests and reproducible pipelines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def monotonic_id() -> Column:
-    """Partition-encoded 64-bit id — unique per run, NOT stable across
-    runs or repartitioning. Narrow (no shuffle)."""
-    return F.monotonically_increasing_id()
 
 
 def stable_row_id(

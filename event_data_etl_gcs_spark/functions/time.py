@@ -11,7 +11,7 @@ reproducible where the reference's were cluster-dependent.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -42,3 +42,19 @@ def time_dimension_columns(ts: Column | str) -> dict[str, Column]:
         "year": F.year(c),
         "weekday": F.dayofweek(c),
     }
+
+
+def ensure_tz_timestamp(df: DataFrame, *cols: str) -> DataFrame:
+    """Cast TIMESTAMP_NTZ columns to TIMESTAMP.
+
+    Parquet written without the isAdjustedToUTC flag reads back as NTZ,
+    and ``withWatermark`` and TZ-aware date functions need a TIMESTAMP
+    column. With the session TZ pinned UTC the cast relabels the type
+    without changing values. Works on batch and streaming frames (pure
+    projection).
+    """
+    dtypes = dict(df.dtypes)
+    for col in cols:
+        if dtypes.get(col) == "timestamp_ntz":
+            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    return df

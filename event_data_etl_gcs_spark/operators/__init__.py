@@ -2,18 +2,16 @@ from .dedup import (
     minhash_incremental_pairs,
     minhash_lsh_pairs,
     minhash_signatures,
-    with_minhash,
     with_simhash,
 )
 from .graph import connected_components, dedup_clusters
 from .ivf import (
     build_ivf_index,
-    ivf_append_batch,
     ivf_topk,
     ivf_topk_on_index,
     train_ivf_centroids,
 )
-from .relational import argmax_latest, latest_row_per_key
+from .relational import argmax_latest
 from .similarity import brute_force_topk, lsh_bucket_topk
 from .skew import (
     bucketed_running_sum,
@@ -27,17 +25,14 @@ from .upsert import merge_upsert
 
 __all__ = [
     "argmax_latest",
-    "latest_row_per_key",
     "minhash_lsh_pairs",
     "minhash_incremental_pairs",
     "minhash_signatures",
-    "with_minhash",
     "with_simhash",
     "connected_components",
     "dedup_clusters",
     "train_ivf_centroids",
     "build_ivf_index",
-    "ivf_append_batch",
     "ivf_topk",
     "ivf_topk_on_index",
     "brute_force_topk",

@@ -106,14 +106,6 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     return _track_ann_cache(sig.cache())
 
 
-def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds mh_0..mh_{N-1} MinHash signature columns (map-only)."""
-    out = df.withColumn("__sig", F.expr(minhash_signature_struct_sql(text_col)))
-    for j in range(N_HASHES):
-        out = out.withColumn(f"mh_{j}", F.col("__sig.mhs")[j])
-    return out.withColumn("sh_hashes", F.col("__sig.sh_hashes")).drop("__sig")
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -651,113 +643,3 @@ def containment_keep(
         .join(losers, id_col, "left_anti")
         .select(id_col, F.col("n_sh").cast("long").alias("n_shingles"))
     )
-
-
-def containment_incremental_pairs(
-    new_docs: DataFrame,
-    existing_sets: DataFrame,
-    existing_prefix: DataFrame,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Incremental containment check: NEW documents vs an already-indexed
-    corpus, without re-scanning it — the containment sibling of
-    ``minhash_incremental_pairs`` (and of the IVF/PQ/kNN ingests).
-
-    Why this can be EXACT without recomputing history: prefix filtering
-    is correct for ANY ``n - ceil(t*n) + 1``-sized subset of a doc's
-    shingles (pigeonhole — the ordering only tunes efficiency), so each
-    doc's probe prefix can be FROZEN at its arrival batch. The state is
-    two skinny tables:
-
-    * ``existing_sets`` — (id, s): full distinct-shingle-hash arrays,
-      joined back by id for verification only.
-    * ``existing_prefix`` — (id, h): each indexed doc's frozen probe
-      prefix rows.
-
-    Candidates per increment (all hash equi-joins, increment-sized
-    probe sides):
-
-    * new-contained-in-anything: new prefixes x (existing ∪ new)
-      postings;
-    * old-contained-in-new: existing FROZEN prefixes x new postings —
-      this is the direction a symmetric index would miss, and the
-      frozen-prefix trick is what makes it exact.
-
-    Every ordered pair (x contained-in y) is emitted exactly once —
-    in the batch where its LATER member arrives (pytest-pinned: the
-    union over any batch split equals the full-corpus
-    :func:`containment_pairs` build). No collapse-identical here:
-    collapse keys depend on full-corpus membership and would make the
-    emission batch-dependent (the knn_topk_append_batch reasoning).
-
-    Returns ``(pairs, new_sets, new_prefix)``; the caller appends the
-    last two to the persisted state. Ids must be globally unique.
-    """
-    from pyspark.sql import Window
-
-    new_sets = new_docs.select(
-        F.col(id_col).alias("id"),
-        F.expr(shingle_hash_set_sql(text_col)).alias("s"),
-    ).filter(F.size("s") > 0)
-    from .graph import _track_ann_cache
-
-    new_sets = _track_ann_cache(new_sets.cache())
-
-    new_post = new_sets.select("id", F.explode("s").alias("h"))
-    # Prefix ordering from batch-local doc-freq (+ h tie-break): any
-    # ordering is exact; batch-local df is the cheapest useful bias
-    # (no history scan). The prefix length bound uses exact integer
-    # arithmetic — see containment_pairs.
-    freq = new_post.groupBy("h").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("id").orderBy("df", "h")
-    new_prefix = (
-        new_post.join(freq, "h")
-        .withColumn("n_a", F.count("*").over(Window.partitionBy("id")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.expr(
-                f"n_a - (({threshold_num} * n_a + {threshold_den} - 1) "
-                f"DIV {threshold_den}) + 1"
-            )
-        )
-        .select("id", "h")
-    )
-
-    exist_post = existing_sets.select("id", F.explode("s").alias("h"))
-    post_all = exist_post.unionByName(new_post)
-    cand_a = (
-        new_prefix.alias("a")
-        .join(post_all.alias("b"), "h")
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    cand_b = (
-        existing_prefix.alias("a")
-        .join(new_post.alias("b"), "h")
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    cand = cand_a.unionByName(cand_b).distinct()
-
-    all_sets = existing_sets.unionByName(new_sets)
-    va = all_sets.select(F.col("id").alias("id_a"), F.col("s").alias("sa"))
-    vb = all_sets.select(F.col("id").alias("id_b"), F.col("s").alias("sb"))
-    thr = threshold_num / threshold_den
-    pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.expr("size(array_intersect(sa, sb))").cast("double")
-                / F.expr("size(sa)")
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= F.lit(thr))
-    )
-    return pairs, new_sets, new_prefix

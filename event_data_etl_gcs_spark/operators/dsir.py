@@ -1,7 +1,6 @@
 """DSIR building blocks (Data Selection via Importance Resampling, Xie
-et al. 2023, arXiv:2302.03169) — shared between the batch queries
-(queries/lm_quality.py) and the streaming model maintenance
-(streaming/dsir.py).
+et al. 2023, arXiv:2302.03169) for the batch queries
+(queries/lm_quality.py).
 
 The model is a hashed-unigram bucket-count table: 4096 rows however big
 the corpus — the whole point of hashed features is that the model stays

@@ -27,12 +27,11 @@ from pyspark.sql import functions as F
 # such frame is registered here and the PREVIOUS build's caches are
 # released on the next public entry (knn_edges_ann / cosine_dedup_pairs),
 # bounding accumulated executor storage at one build's worth in
-# long-lived drivers and streaming loops. Unpersisting is always safe:
+# long-lived drivers. Unpersisting is always safe:
 # an older still-lazy result simply recomputes if materialized later.
 #
 # The registry is THREAD-LOCAL (VERDICT r9 "what's wrong" #2): two
-# concurrent builds in one driver — e.g. parallel streaming queries,
-# whose foreachBatch callbacks run on separate threads — must not
+# concurrent builds in one driver, on separate threads, must not
 # release each other's live caches mid-build. Within a thread, builds
 # are sequential, so release-previous-at-next-entry stays correct. A
 # thread that exits with tracked frames leaks nothing durable: Spark's
@@ -1112,143 +1111,6 @@ def banded_signature_table(
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bkt")
-
-
-def knn_topk_append_batch(
-    new_vectors: DataFrame,
-    existing_vectors: DataFrame,
-    existing_topk: DataFrame,
-    k: int = 3,
-    n_bands: int = 4,
-    band_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """One increment of kNN-graph maintenance: fold the new batch into a
-    persisted directed top-k state WITHOUT re-scoring the old corpus
-    against itself — the kNN sibling of ``minhash_incremental_pairs``
-    (docs), ``ivf_append_batch`` (cells) and the PQ streaming ingest.
-
-    Candidates are the banded-SRP bucket matches between NEW vectors
-    and (existing + new); each candidate pair is exactly cosine-scored
-    once — in the batch where its LATER member arrives — so the union
-    of all increments sees exactly the candidate set of the uncapped
-    batch build (same bucket condition, same fold scoring). The
-    existing directed top-k rows join the new candidate rows and
-    re-rank per node: a new vector can both acquire its own neighbors
-    and displace an old node's current neighbor.
-
-    Deliberately UNCAPPED (no max_bucket/ring_cap): ring sampling
-    orders by full bucket membership, which changes as batches arrive
-    — it would make the result depend on batch boundaries. Exactness
-    contract (pytest-pinned): the final state is IDENTICAL however the
-    corpus is split into batches, and its u<v edge derivation equals
-    ``knn_edges_ann(..., max_bucket=None, ring_cap=None,
-    scoring="fold")`` on the full corpus. ``band_bits`` is pinned (no
-    auto-derive): the signature geometry must not drift between
-    batches.
-
-    Returns (updated_topk, new_vector_rows): the FULL replacement
-    top-k state (<= k rows per node) and the batch's (id, embedding,
-    nrm) rows for the vector index append. At 100 TB you would rewrite
-    only the touched nodes (query_ids present in the scored candidate
-    set) through a partition-pruned MERGE/replace instead of a full
-    state rewrite; the state itself stays edge-count-bounded either
-    way (n x k rows).
-    """
-    from .similarity import dot_sql, norm_sql
-
-    base_new = new_vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("embedding"),
-        F.expr(norm_sql(vec_col)).alias("nrm"),
-    ).filter(F.col("nrm") > 0)
-    all_vecs = existing_vectors.unionByName(base_new)
-
-    sig_new = banded_signature_table(base_new, n_bands, band_bits)
-    sig_all = banded_signature_table(all_vecs, n_bands, band_bits)
-    cand = (
-        sig_new.alias("a")
-        .join(
-            sig_all.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least("a.id", "b.id").alias("ida"),
-            F.greatest("a.id", "b.id").alias("idb"),
-        )
-        .distinct()
-    )
-    va = all_vecs.select(
-        F.col("id").alias("ida"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    vb = all_vecs.select(
-        F.col("id").alias("idb"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    scored = (
-        cand.join(va, "ida")
-        .join(vb, "idb")
-        .select(
-            "ida",
-            "idb",
-            (
-                F.expr(dot_sql("ea", "eb")) / (F.col("na") * F.col("nb"))
-            ).alias("cos_sim"),
-        )
-    )
-    both = scored.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("ida").alias("query_id"),
-                    F.col("idb").alias("neighbor_id"),
-                ),
-                F.struct(
-                    F.col("idb").alias("query_id"),
-                    F.col("ida").alias("neighbor_id"),
-                ),
-            )
-        ).alias("qn"),
-        "cos_sim",
-    ).select("qn.query_id", "qn.neighbor_id", "cos_sim")
-    # dedupe (query, neighbor) BEFORE ranking: in normal forward
-    # progress the state never overlaps the new candidates (every new
-    # pair touches a vector no prior batch has seen), but a foreachBatch
-    # REPLAY re-scores a batch the state already integrated — without
-    # the dedupe the duplicate row eats a rank slot and evicts the
-    # node's true k-th neighbor (cos values of duplicates are identical,
-    # so max() is exact)
-    merged = (
-        existing_topk.unionByName(both)
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    updated = (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
-    return updated, base_new
-
-
-def knn_topk_to_edges(topk: DataFrame) -> DataFrame:
-    """Directed top-k state -> the undirected (u < v, cos_sim) edge
-    contract of :func:`knn_edges` / :func:`knn_edges_ann`."""
-    return (
-        topk.select(
-            F.least("query_id", "neighbor_id").alias("u"),
-            F.greatest("query_id", "neighbor_id").alias("v"),
-            "cos_sim",
-        )
-        .distinct()
-    )
 
 
 def knn_edges_ann(

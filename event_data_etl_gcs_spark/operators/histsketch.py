@@ -73,7 +73,7 @@ def duck_lo_cents_expr(bin_col: str) -> str:
 def day_histogram_sketch(events: DataFrame) -> DataFrame:
     """(day, bin, cnt): the mergeable per-day sketch rows — one shuffle,
     output size = days x occupied buckets (hundreds), never events."""
-    from ..streaming._util import ensure_tz_timestamp
+    from ..functions.time import ensure_tz_timestamp
 
     ev = ensure_tz_timestamp(events, "ts").withColumn(
         "cents", (F.col("value").cast("decimal(18,2)") * 100).cast("long")

@@ -104,8 +104,9 @@ def build_ivf_index(
     (cosine undefined). This frame IS the persistable index: write it
     partitioned by ``cell`` and probes read only the probed cells'
     partitions. Assignment is per-vector and independent of the rest of
-    the corpus, so an index appended incrementally (``ivf_append_batch``)
-    is bit-identical to one rebuilt from scratch with the same centroids.
+    the corpus, so index rows for new vectors, assigned against the frozen
+    centroids and appended to the persisted index, give an index
+    bit-identical to one rebuilt from scratch with the same centroids.
     """
     from .similarity import norm_sql
 
@@ -119,20 +120,6 @@ def build_ivf_index(
         .withColumn("nrm", F.expr(norm_sql("embedding")))
         .filter(F.col("nrm") > 0)
     )
-
-
-def ivf_append_batch(
-    new_vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Index rows for a batch of NEW vectors: assign against the frozen
-    trained centroids (map-only — no retraining, no touching the existing
-    index) and append to the persisted inverted file. This is how an IVF
-    index absorbs inserts between periodic retrains; cell balance decays
-    as the data distribution drifts, which is the retrain trigger."""
-    return build_ivf_index(new_vectors, centroids, id_col, vec_col)
 
 
 def ivf_topk_on_index(

@@ -63,8 +63,8 @@ MANIFEST_NAME = "manifest.json"
 def model_version(qe, qw=None) -> str:
     """Content-addressed version of a quantized PCA model: SHA-256 over
     the exact int64 eigenvector components (and whitening factors when
-    given). Bit-identical models — e.g. a streamed refit over the same
-    corpus — share a version; any numeric change produces a new one."""
+    given). Bit-identical models — e.g. a refit over the same corpus —
+    share a version; any numeric change produces a new one."""
     import hashlib
 
     h = hashlib.sha256()
@@ -467,9 +467,8 @@ def compact_ivf_index(spark: SparkSession, path: str) -> dict:
     tombstone log. Crash-safe via :func:`recover_ivf_compaction` —
     phases ordered so the staged copy is complete before the first
     rename, and tombstones are cleared only after the swap (re-filtering
-    already-removed rows is a no-op). Single-writer contract: run
-    between drains, like streaming/compaction.py. Returns the updated
-    manifest."""
+    already-removed rows is a no-op). Single-writer contract: no append
+    or delete may run concurrently. Returns the updated manifest."""
     import shutil
 
     manifest = read_manifest(path)

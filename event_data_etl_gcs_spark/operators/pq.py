@@ -292,17 +292,3 @@ def load_pq_index(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
         "vec_id", "s.m", "s.code"
     )
     return codebook, codes
-
-
-def pq_append_batch(
-    new_vectors: DataFrame,
-    codebook: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Code rows for a batch of NEW vectors against the frozen codebook
-    (map-only; nothing re-encodes). Per-vector encoding is independent
-    of the rest of the corpus, so an appended index is bit-identical to
-    a from-scratch rebuild with the same codebook — same property, and
-    same retrain-on-drift caveat, as ivf_append_batch."""
-    return encode_codes(new_vectors, codebook, id_col, vec_col)

@@ -1,9 +1,8 @@
 """Core relational operators the reference composes by hand.
 
 Most of SURVEY.md §2's inventory IS the DataFrame API (select / filter /
-join / distinct); this module holds the two patterns the reference builds
-out of primitives, with both the reference's semantics and the idiomatic
-deterministic variant.
+join / distinct); this module holds the patterns the reference builds
+out of primitives, with the reference's semantics.
 """
 
 from __future__ import annotations
@@ -31,22 +30,6 @@ def argmax_latest(
     if extra_filter is not None:
         out = out.filter(extra_filter)
     return out.drop("__max_ts")
-
-
-def latest_row_per_key(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[Column],
-) -> DataFrame:
-    """Deterministic variant: exactly one row per key via row_number
-    (SURVEY.md §4.3-6). ``order_by`` should include a tiebreaker column.
-    """
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def enforce_not_null(df: DataFrame, cols: list[str]) -> DataFrame:

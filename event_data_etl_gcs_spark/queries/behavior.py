@@ -430,8 +430,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-touch rows, never a cross-row float sum), so the full "
         "credit ledger is oracle-exact; downstream rollups should sum "
         "the integer numerators and divide once. Time-bounded equi-join "
-        "on user_id — the watermarked stream-stream attribution's batch "
-        "twin (streaming/joins.py)."
+        "on user_id."
     ),
 )
 def linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -158,8 +158,7 @@ def hash_order_prefix_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, cum_before): exclusive running token total in
     the deterministic hash order — the DISTRIBUTED prefix-sum (local
     windows inside SHARD_BUCKETS hash-range buckets + one offsets
-    window over bucket totals). Shared by the batch shard queries and
-    the streaming shard writer."""
+    window over bucket totals). Shared by the shard queries."""
     from pyspark.sql import Window
 
     t = docs.select(

@@ -381,7 +381,37 @@ def domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return authority_from_pairs(pairs)
+    doms = (
+        pairs.select(F.col("src_host").alias("dom"))
+        .unionAll(pairs.select(F.col("dst_host").alias("dom")))
+        .distinct()
+    )
+    # domain-cardinality table: the single-partition ordering window is
+    # bounded by the number of DOMAINS, never documents
+    dids = doms.select(
+        "dom",
+        (F.row_number().over(Window.orderBy("dom")) - 1)
+        .cast("long")
+        .alias("nid"),
+    ).localCheckpoint(eager=True)
+    a = dids.select(F.col("dom").alias("src_host"), F.col("nid").alias("anid"))
+    b = dids.select(F.col("dom").alias("dst_host"), F.col("nid").alias("bnid"))
+    edges = (
+        pairs.join(a, "src_host")
+        .join(b, "dst_host")
+        .filter(F.col("anid") != F.col("bnid"))
+        .select(
+            F.least("anid", "bnid").alias("u"),
+            F.greatest("anid", "bnid").alias("v"),
+        )
+        .distinct()
+    )
+    pr = pagerank_quantized(edges, iterations=PR_ITERS)
+    return pr.join(dids, pr["node"] == dids["nid"]).select(
+        F.col("dom").alias("domain"),
+        "pr_scaled",
+        F.col("pagerank").alias("authority"),
+    )
 
 
 @query(
@@ -431,43 +461,4 @@ def doc_outlink_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_domains") * F.lit(PR_SCALE)).cast("double"),
         )
         .select("doc_id", "n_domains", "auth_sum_scaled", "mean_authority")
-    )
-
-
-def authority_from_pairs(pairs: DataFrame) -> DataFrame:
-    """(domain, pr_scaled, authority) from a distinct (src_host,
-    dst_host) pair frame — the composition domain_authority registers,
-    factored so the STREAMED link-graph state (streaming/linkgraph.py)
-    recomputes authority over its merged domain graph through the
-    identical deterministic id assignment + integer PageRank."""
-    doms = (
-        pairs.select(F.col("src_host").alias("dom"))
-        .unionAll(pairs.select(F.col("dst_host").alias("dom")))
-        .distinct()
-    )
-    # domain-cardinality table: the single-partition ordering window is
-    # bounded by the number of DOMAINS, never documents
-    dids = doms.select(
-        "dom",
-        (F.row_number().over(Window.orderBy("dom")) - 1)
-        .cast("long")
-        .alias("nid"),
-    ).localCheckpoint(eager=True)
-    a = dids.select(F.col("dom").alias("src_host"), F.col("nid").alias("anid"))
-    b = dids.select(F.col("dom").alias("dst_host"), F.col("nid").alias("bnid"))
-    edges = (
-        pairs.join(a, "src_host")
-        .join(b, "dst_host")
-        .filter(F.col("anid") != F.col("bnid"))
-        .select(
-            F.least("anid", "bnid").alias("u"),
-            F.greatest("anid", "bnid").alias("v"),
-        )
-        .distinct()
-    )
-    pr = pagerank_quantized(edges, iterations=PR_ITERS)
-    return pr.join(dids, pr["node"] == dids["nid"]).select(
-        F.col("dom").alias("domain"),
-        "pr_scaled",
-        F.col("pagerank").alias("authority"),
     )

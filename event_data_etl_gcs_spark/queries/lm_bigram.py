@@ -167,10 +167,7 @@ def score_bigram_with_model(
     bg: DataFrame, ctx: DataFrame, bgc: DataFrame, tot: DataFrame,
     how: str = "left",
 ) -> DataFrame:
-    """Score positioned bigram rows against a (ctx, bgc, tot) model —
-    the SAME join/fold arithmetic whether the model was built in one
-    batch pass or folded from streamed per-delivery count partials
-    (counts are exact integers, so streamed == batch bit-identically).
+    """Score positioned bigram rows against a (ctx, bgc, tot) model.
 
     The model joins default to LEFT joins with counts coalesced to 0:
     add-one smoothing defines p for bigrams ABSENT from the model as

@@ -228,8 +228,7 @@ cum AS (SELECT bin, sum(cnt) OVER (ORDER BY bin) AS cum FROM b)
         "float t-digest the whole pipeline is engine-exact: the oracle "
         "recomputes sketch, merge, and quantile walk bit-identically. "
         "Completes the sketch family (HLL/KMV/CMS/Bloom/bitmap had no "
-        "quantile member); streaming maintenance rides the same "
-        "crash-atomic commit_state as the HLL rollup."
+        "quantile member)."
     ),
 )
 def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,5 +1,4 @@
-"""Event-time windowing queries (the batch faces of the streaming
-operators in streaming/windowed.py)."""
+"""Event-time windowing queries."""
 
 from __future__ import annotations
 
@@ -20,9 +19,8 @@ from .registry import query
         "FROM events GROUP BY date_trunc('day', ts), event_type"
     ),
     doc=(
-        "Tumbling event-time window aggregation (F.window) — the batch "
-        "face of the streaming windowed count; one shuffle on "
-        "(window, type)."
+        "Tumbling event-time window aggregation (F.window); one shuffle "
+        "on (window, type)."
     ),
 )
 def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,6 +1,5 @@
 from .catalog import (
     load_table,
-    load_tables,
     read_parquet_evolving,
     register_views,
 )
@@ -14,7 +13,6 @@ from .parquet_sink import (
 
 __all__ = [
     "load_table",
-    "load_tables",
     "register_views",
     "read_parquet_evolving",
     "read_json_events",

@@ -195,10 +195,6 @@ def read_parquet_evolving(
     )
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 # context key -> sf_dir the views currently point at. Re-registering
 # the same directory into the same session is pure overhead (10 fresh
 # parquet file indexes per call, ~0.3 s of driver time inside every

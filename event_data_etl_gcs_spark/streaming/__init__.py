@@ -1,81 +1,6 @@
-from .corpus import (
-    corpus_ingest_batch,
-    read_streamed_corpus,
-    run_streaming_corpus_ingest,
-)
 from .incremental import run_incremental_available_now, streaming_log_source
-from .linalg import (
-    gram_maintain_batch,
-    read_streamed_gram,
-    run_streaming_gram_maintenance,
-    streamed_pca_fit,
-)
-from .neardedup import (
-    check_batch_against_index,
-    read_knn_topk,
-    run_streaming_ivf_ingest,
-    run_streaming_knn_maintenance,
-    run_streaming_near_dedup,
-)
-from .anngraph import (
-    ann_graph_ingest_batch,
-    run_streaming_ann_graph,
-    streamed_bfs_hops_ann,
-    streamed_knn_edges,
-    streamed_pagerank_ann,
-    streamed_triangle_counts_ann,
-)
-from .dsir import (
-    read_dsir_model,
-    run_streaming_dsir_maintenance,
-    score_against_model,
-)
-from .segdedup import (
-    read_clean_corpus,
-    run_streaming_segdedup,
-    segdedup_ingest_batch,
-)
-from .semdedup import (
-    read_semdedup_decisions,
-    run_streaming_semdedup,
-    semdedup_ingest_batch,
-)
-from .sessions import stateful_sessionize
-from .sharding import (
-    read_shard_assignments,
-    run_streaming_sharding,
-    shard_ingest_batch,
-)
-from .windowed import stateful_running_max, windowed_event_counts
 
 __all__ = [
     "run_incremental_available_now",
     "streaming_log_source",
-    "run_streaming_near_dedup",
-    "run_streaming_ivf_ingest",
-    "run_streaming_knn_maintenance",
-    "read_knn_topk",
-    "check_batch_against_index",
-    "corpus_ingest_batch",
-    "run_streaming_corpus_ingest",
-    "read_streamed_corpus",
-    "run_streaming_dsir_maintenance",
-    "read_dsir_model",
-    "score_against_model",
-    "run_streaming_segdedup",
-    "segdedup_ingest_batch",
-    "read_clean_corpus",
-    "run_streaming_semdedup",
-    "semdedup_ingest_batch",
-    "read_semdedup_decisions",
-    "stateful_sessionize",
-    "run_streaming_sharding",
-    "shard_ingest_batch",
-    "read_shard_assignments",
-    "stateful_running_max",
-    "windowed_event_counts",
-    "gram_maintain_batch",
-    "read_streamed_gram",
-    "run_streaming_gram_maintenance",
-    "streamed_pca_fit",
 ]

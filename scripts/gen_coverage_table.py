@@ -40,14 +40,8 @@ NON_QUERY = """
 
 | capability | where | proof |
 |---|---|---|
-| Incremental ingest: file source + Available-Now + watermark dedup + foreachBatch MERGE-upsert fan-out | `streaming/incremental.py` | `test_streaming_incremental.py` (cross-run upsert) |
-| `dropDuplicatesWithinWatermark` dedup mode | `streaming/incremental.py` | `test_streaming_incremental.py` |
-| Watermarked tumbling-window streaming aggs | `streaming/windowed.py` | `test_streaming_windowed.py` (stream == batch) |
-| Custom stateful op (running max, applyInPandasWithState) | `streaming/windowed.py` | `test_streaming_windowed.py` |
-| Stateful sessionization, EventTimeTimeout, append-once | `streaming/sessions.py` | `test_streaming_sessions.py` (== batch sessionize) |
-| Stream-stream join w/ state timeout (left-outer attribution) | `streaming/joins.py` | `test_streaming_joins.py` |
-| Streaming near-dedup vs growing persisted MinHash index | `streaming/neardedup.py` | `test_streaming_neardedup.py` (== full rebuild, cross-run) |
-| Streaming IVF-index ingest (cell-partitioned appends) | `streaming/neardedup.py` | `test_streaming_neardedup.py` (bit-identical to rebuild) |
+| Incremental ingest: file source + Available-Now + watermark dedup + foreachBatch MERGE-upsert fan-out | `streaming/incremental.py` | `test_sparkify_incremental.py` (cross-run upsert, two rounds == batch, crash replay) |
+| `dropDuplicatesWithinWatermark` dedup mode | `streaming/incremental.py` | `test_sparkify_incremental.py::test_dedup_within_watermark_collapses_resends` |
 | Incremental near-dedup operator (persisted signature table) | `operators/dedup.py` | `test_training_ops.py` parquet round-trip + oracle row |
 | IVF inverted file: build / append / query persisted | `operators/ivf.py` | `test_ivf.py` (append == rebuild, recall gates) |
 | Schema evolution: mergeSchema, per-partition, superset hot path | `sources/catalog.py` | `test_schema_evolution.py` |
@@ -64,28 +58,18 @@ NON_QUERY = """
 | Cross-system orderless partition checksums (migration validation) | `operators/validation.py` | `test_validation.py` + oracle row `orders_partition_checksums` |
 | In-flight quality metrics riding the action (`DataFrame.observe`) | `plans/quality_hooks.py` | `test_observability.py` |
 | Dynamic partition pruning (runtime subquery on the partitioned scan) | Spark DPP, exercised end-to-end | `test_scale_techniques2.py` |
-| Stream-stream INTERVAL overlap join (bounded-length state eviction) | `streaming/joins.py` | `test_streaming_joins.py` (== batch) |
-| Streaming KMV + partition-checksum maintenance (replay-safe) | `streaming/sketches.py` | `test_streaming_sketches.py` (bit-exact vs batch) |
 | ANN-backed kNN graph build (banded SRP candidates, recall-measured) | `operators/graph.py` `knn_edges_ann` | `test_graph.py` (recall vs exact) |
 | Perceptual image dHash dedup (map-only, 8 bytes/image state) | `operators/multimodal.py` | `test_multimodal_codecs.py` |
 | zlib compression-ratio quality scoring (Arrow-batched mapInPandas) | `operators/text.py` `compression_ratio` | `test_training_ops.py` (byte-exact vs zlib) |
 | Corpus pipeline v2: dedup + decontamination + cluster-aware split | `plans/training_corpus.py` | `test_training_ops.py::test_corpus_v2_invariants` |
-| End-to-end streaming DAG: watermark dedup -> stateful sessionize -> broadcast enrich -> checkpointed sink | `streaming/` composition | `test_streaming_sessions.py::test_end_to_end_streaming_pipeline` |
-| Streaming exact substring dedup: mergeable gram-postings state, frontier semantics (final-delivery == batch, monotone under-removal), replay-idempotent | `streaming/substring.py` | `test_streaming_substring.py` + chaos matrix |
 | Persisted IVF append path: frozen-centroid inserts == fresh full build, version-guarded | `operators/ivf_store.py` `append_ivf_index` | `test_ivf_store.py::test_append_equals_fresh_full_build` |
 | Persisted IVF deletes: tombstone log + crash-safe compaction (phase-by-phase recovery), append guard against tombstoned ids | `operators/ivf_store.py` `delete_from_ivf_index` / `compact_ivf_index` | `test_ivf_store.py` (delete == reduced-corpus build; crash matrix) |
 | IVF index health report: cell balance / hot-cell share / tombstone fraction (retrain & compact scheduling signals) | `operators/ivf_store.py` `ivf_index_stats` | `test_ivf_store.py::test_index_stats_track_lifecycle` |
-| Streaming-state compaction: fold batch partials into one consolidated partition, staged crash-safe phases, checkpoint-scoped sum states | `streaming/compaction.py` | `test_compaction.py` (read/continuation equivalence + crash matrix) |
-| Keyed-count state compaction (sum merge, checkpoint-scoped) | `streaming/compaction.py` `counts_merge` | `test_compaction.py::test_lm_counts_compaction_scores_bit_identical` |
-| Streaming bigram-LM model maintenance: mergeable uni/bi count state, streamed scoring == batch bit-identical, replay-idempotent | `streaming/lm_bigram.py` | `test_streaming_lm_bigram.py` + chaos matrix |
-| Streaming LM-gated ingest (v6 quality stage online): frontier absolute-cutoff gate, one-delivery == batch pin, per-prefix reproducibility | `streaming/lm_bigram.py` `lm_gated_ingest_batch` | `test_streaming_lm_bigram.py` + chaos matrix |
-| Streaming PCA model maintenance: exactly-mergeable int64 Gram state, streamed model bit-identical to batch refit | `streaming/linalg.py` | `test_streaming_linalg.py` + chaos matrix |
 | Differential SQL fuzzing: generated predicate/group-by/aggregate/window AND join-surface queries (USING/ON x inner/left/right/full, NULLIF null keys, EXISTS/IN semi-anti incl. three-valued NOT IN, self band join) run verbatim on Spark AND DuckDB, exact frame equality (derandomized 220-example suite; caught a real LIKE-vs-= precedence divergence) | `tests/test_fuzz_differential.py` | same |
 | Physical-plan regression pins for the LM family (broadcast model joins, array-side bigrams, map-side WindowGroupLimit, forced-SMJ branch bit-identity) | `tests/test_lm_plans.py` | same |
 | HTML/boilerplate main-content extraction: native-expression block segmentation + link-density keep rule over a deterministic in-query raw-HTML fixture; map-only plan pinned | `operators/html.py` `queries/html.py` | `test_html_extract.py` + oracle suite |
 | Link graph from extracted anchors: href/anchor-text harvest (map-only), domain edge aggregate, oracle-exact scaled-integer domain authority (PageRank over the domain graph) | `queries/linkgraph.py` | `test_linkgraph.py` + oracle suite |
 | IVF retrain actuator: stats-threshold trigger, Lloyd-refined centroids (same PCA model), versioned crash-safe install, drift-recall recovery probed | `operators/ivf_store.py` `retrain_ivf_index` | `test_ivf_retrain.py` + SCALE_r10.md §2 |
-| Distributed streaming warm start: seed rides in-band as pre-aggregated unit rows (no driver dict), 300k-user pin vs batch truth | `streaming/stateful_v2.py` `stage_seeded_units_source` | `test_stateful_v2.py` |
 """
 
 

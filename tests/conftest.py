@@ -11,12 +11,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from event_data_etl_gcs_spark.schemas import TESTDATA_TABLES
 from event_data_etl_gcs_spark.session import get_spark
-from event_data_etl_gcs_spark.streaming.stateful_v2 import enable_tws_runtime
-
-# Must run before the first SparkSession: exports PYTHONPATH so Python
-# workers bootstrap the vendored protobuf runtime (sitecustomize) that
-# transformWithStateInPandas' worker protocol needs. No-op elsewhere.
-enable_tws_runtime()
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
@@ -28,9 +22,8 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
 # unfinished suite proves nothing). Default = FAST tier: the full
 # DuckDB oracle gate (the driver's actual correctness surface — all 280
 # registered queries compared exactly), the differential fuzz file, and
-# every module file under ~20 s. The SLOW tier (long streaming
-# runtimes, chaos/recovery, property sweeps, heavy ANN/kNN builds) is
-# deselected unless:
+# every module file under ~20 s. The SLOW tier (property sweeps, heavy
+# ANN/kNN/IVF builds, crash-recovery matrices) is deselected unless:
 #   * SPARK_GRAFT_FULL_TESTS=1 (the full suite, unchanged), or
 #   * the file is named explicitly on the command line
 #     (`pytest tests/test_graph.py` always runs all of it).
@@ -39,36 +32,19 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
 # ---------------------------------------------------------------------------
 SLOW_TIER_FILES = frozenset(
     {
-        "test_chaos_streaming.py",
-        "test_stateful_v2.py",
-        "test_streaming_joins.py",
         "test_training_ops.py",
         "test_properties.py",
-        "test_streaming_incremental.py",
         "test_priority_tier.py",
         "test_graph.py",
-        "test_streaming_corpus.py",
-        "test_compaction.py",
-        "test_advice_r9.py",
         "test_ivf_store.py",
-        "test_streaming_sessions.py",
         "test_advice_r10.py",
-        "test_streaming_anngraph.py",
-        "test_streaming_lm_bigram.py",
         "test_similarity.py",
         "test_ivf_retrain.py",
-        "test_streaming_neardedup.py",
-        "test_streaming_windowed.py",
         "test_linkgraph.py",
         "test_delete_where.py",
-        "test_streaming_linkgraph.py",
         "test_semdedup.py",
-        "test_advice_r7.py",
-        "test_streaming_substring.py",
         "test_pq.py",
         "test_ivf.py",
-        "test_streaming_semdedup.py",
-        "test_advice_r4.py",
     }
 )
 

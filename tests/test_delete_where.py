@@ -344,10 +344,28 @@ def test_path_render_boolean_and_null():
     assert _path_render("a:b") == "a:b"
 
 
-def test_read_hdr_quantiles_before_any_commit_is_loud(spark, tmp_path):
-    import pytest
+def test_delete_where_scientific_float_partition(spark, tmp_path):
+    """A float partition value in the scientific range renders as
+    '1.0E-5' in the hive path (Java Double.toString) but '1e-05' via
+    Python str — string matching misses it, so a fully-vacated dir
+    stayed on disk and its stale rows resurfaced (ADVICE r7). Matching
+    is now numeric for floats."""
+    d = str(tmp_path / "fp")
+    spark.createDataFrame(
+        [(1, 10, 1e-5), (2, 20, 1e-5), (3, 30, 0.5)],
+        "id long, val long, eps double",
+    ).write.mode("overwrite").partitionBy("eps").parquet(d)
+    def sci_dirs():
+        return [
+            e for e in os.listdir(d)
+            if e.startswith("eps=") and "E" in e[len("eps="):].upper()
+        ]
 
-    from event_data_etl_gcs_spark.streaming.sketches import read_hdr_quantiles
+    assert sci_dirs(), f"expected a scientific-notation partition dir, got {os.listdir(d)}"
 
-    with pytest.raises(FileNotFoundError, match="no committed HDR sketch"):
-        read_hdr_quantiles(spark, str(tmp_path / "never_ran"))
+    deleted = delete_where(spark, d, "eps < 1e-4", "eps")
+    assert deleted == 2
+    # the vacated scientific dir is actually gone -> no stale resurfacing
+    assert not sci_dirs()
+    back = [(r["id"], r["eps"]) for r in spark.read.parquet(d).collect()]
+    assert back == [(3, 0.5)]

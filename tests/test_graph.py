@@ -433,3 +433,24 @@ def test_ann_cache_accounting_bounded(spark):
 
     graph.release_ann_caches()
     assert not tracked()
+
+
+def test_ann_cache_registry_is_thread_local(spark):
+    """A concurrent build on another thread (parallel queries in one
+    session) must not release this thread's live ANN caches mid-build."""
+    import threading
+
+    from event_data_etl_gcs_spark.operators.graph import (
+        _track_ann_cache,
+        release_ann_caches,
+    )
+
+    df = spark.range(5).cache()
+    df.count()
+    _track_ann_cache(df)
+    t = threading.Thread(target=release_ann_caches)  # other thread's entry
+    t.start()
+    t.join()
+    assert df.is_cached  # untouched by the other thread's release
+    release_ann_caches()  # own thread releases as before
+    assert not df.is_cached

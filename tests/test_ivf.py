@@ -85,7 +85,6 @@ def test_incremental_index_append_equals_rebuild(spark, tmp_path):
     over the full corpus (same frozen centroids)."""
     from event_data_etl_gcs_spark.operators.ivf import (
         build_ivf_index,
-        ivf_append_batch,
         ivf_topk_on_index,
     )
 
@@ -97,7 +96,7 @@ def test_incremental_index_append_equals_rebuild(spark, tmp_path):
 
     idx_path = str(tmp_path / "ivf_index")
     build_ivf_index(old, cents).write.partitionBy("cell").parquet(idx_path)
-    ivf_append_batch(new, cents).write.mode("append").partitionBy("cell").parquet(idx_path)
+    build_ivf_index(new, cents).write.mode("append").partitionBy("cell").parquet(idx_path)
 
     queries = emb.filter(F.col("vec_id") < 20)
     reloaded = spark.read.parquet(idx_path)

@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +12,7 @@ from event_data_etl_gcs_spark.operators.ivf_store import (
     search_ivf_index,
     write_ivf_index,
 )
-from event_data_etl_gcs_spark.operators.linalg import pca_fit, pca_project
+from event_data_etl_gcs_spark.operators.linalg import pca_fit
 from event_data_etl_gcs_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -89,34 +88,6 @@ def test_version_mismatch_fails_loudly(spark, tmp_path):
     # missing manifest is equally loud
     with pytest.raises(FileNotFoundError):
         search_ivf_index(spark, str(tmp_path / "nope"), queries, qe, qw=qw)
-
-
-def test_streamed_refresh_reprojects_bit_identical_to_batch(spark, tmp_path):
-    """Model lifecycle pin (VERDICT r8 #6): after a streamed Gram
-    refresh, the refreshed model (a) carries the SAME version as a
-    from-scratch batch refit (bit-identical ints -> same content
-    address) and (b) reprojects the corpus bit-identically to the batch
-    model — so an index rebuilt from the streamed model serves exactly
-    the batch answers."""
-    from event_data_etl_gcs_spark.streaming.linalg import (
-        gram_maintain_batch,
-        streamed_pca_fit,
-    )
-
-    emb, qe_b, qw_b = _fit(spark)
-    state = str(tmp_path / "gram")
-    n = emb.count()
-    gram_maintain_batch(emb.filter(F.col("vec_id") < n // 2), 0, state)
-    gram_maintain_batch(emb.filter(F.col("vec_id") >= n // 2), 1, state)
-    qe_s, qw_s, _ = streamed_pca_fit(spark, state)
-    assert model_version(qe_s, qw_s) == model_version(qe_b, qw_b)
-    proj_s = pca_project(emb, qe_s, qw_s).toPandas()
-    proj_b = pca_project(emb, qe_b, qw_b).toPandas()
-    key = ["vec_id", "component"]
-    a = proj_s.sort_values(key).reset_index(drop=True)
-    b = proj_b.sort_values(key).reset_index(drop=True)
-    assert np.array_equal(a["proj"].values, b["proj"].values)
-    assert np.array_equal(a["whitened"].values, b["whitened"].values)
 
 
 def test_append_equals_fresh_full_build(spark, tmp_path):
@@ -380,3 +351,34 @@ def test_index_stats_track_lifecycle(spark, tmp_path):
     s2 = ivf_index_stats(spark, path)
     assert s2["n_tombstones"] == 0
     assert s2["n_rows"] == s0["n_rows"] - 25
+
+
+def test_compact_all_tombstoned_index_stays_readable(spark, tmp_path):
+    from event_data_etl_gcs_spark.operators.ivf_store import (
+        append_ivf_index,
+        compact_ivf_index,
+        delete_from_ivf_index,
+        ivf_index_stats,
+    )
+
+    emb = load_table(spark, SF, "embeddings")
+    qe, qw, _ = pca_fit(emb)
+    path = str(tmp_path / "idx")
+    write_ivf_index(emb, qe, path, qw=qw)
+    delete_from_ivf_index(spark, path, emb.select("vec_id"))
+    m = compact_ivf_index(spark, path)
+    assert m["n_rows"] == 0 and m["n_tombstones"] == 0
+
+    # every lifecycle read of the empty index keeps working
+    stats = ivf_index_stats(spark, path)
+    assert stats["n_rows"] == 0 and stats["n_cells_used"] == 0
+    queries = emb.filter(F.col("vec_id") < 3)
+    got = search_ivf_index(spark, path, queries, qe, qw=qw)
+    assert got.count() == 0
+    # compacting again (no tombstones) is a no-op, not an error
+    m2 = compact_ivf_index(spark, path)
+    assert m2["n_rows"] == 0
+
+    # the index accepts appends again and search comes back to life
+    append_ivf_index(emb, path, qe, qw=qw)
+    assert search_ivf_index(spark, path, queries, qe, qw=qw).count() > 0

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from event_data_etl_gcs_spark.operators.linalg import (
     gram_matrix,
@@ -62,3 +63,14 @@ def test_top_pc_matches_eigh(spark):
     # and the quantized Gram is within quantization noise of the true one
     X = np.stack([np.array(r["embedding"], np.float64) for r in emb.collect()])
     assert np.abs(G - X.T @ X).max() < len(X) * 2 ** -20
+
+
+def test_gram_matrix_empty_corpus_raises_value_error(spark):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="empty"):
+        gram_matrix(empty)
+    allnull = spark.createDataFrame(
+        [(1, None)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="non-null"):
+        gram_matrix(allnull)

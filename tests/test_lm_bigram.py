@@ -9,11 +9,14 @@ token multiset). That discrimination is what the family adds over
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from event_data_etl_gcs_spark.queries.lm_bigram import (
     _DOMAIN_CAP,
+    bigram_rows,
     bigram_scores,
     interp_scores,
+    score_bigram_with_model,
 )
 from event_data_etl_gcs_spark.queries.registry import get_query
 
@@ -135,3 +138,51 @@ def test_domain_cap_keeps_longest_per_source(spark):
             if r.source == src and r.doc_id not in {k.doc_id for k in rows}
         ]
         assert all(c <= floor for c in dropped)
+
+
+def test_score_with_model_keeps_unseen_bigrams(spark):
+    """Bigrams absent from the model score per add-one smoothing
+    ((c(v)+V)/1, c(v)=0 for an unseen context) under the default left
+    joins, instead of vanishing from the per-doc mean."""
+    corpus = spark.createDataFrame(
+        [(1, "a b c")], "doc_id long, text string"
+    )
+    tk, bg = bigram_rows(corpus)
+    bgc = bg.groupBy("prev", "cur").agg(F.count("*").alias("cvw"))
+    ctx = bgc.groupBy("prev").agg(F.sum("cvw").cast("long").alias("cv"))
+    tot = tk.agg(
+        F.count("*").alias("n_total"), F.countDistinct("tok").alias("vsz")
+    )
+    # model: bigrams (a,b):1 (b,c):1; c(a)=c(b)=1; V=3
+    frame = spark.createDataFrame(
+        [(99, "x y"), (100, "a b x")], "doc_id long, text string"
+    )
+    _, frame_bg = bigram_rows(frame)
+    got = {
+        r["doc_id"]: r
+        for r in score_bigram_with_model(frame_bg, ctx, bgc, tot).collect()
+    }
+    # doc 99: single bigram (x,y), context x unseen -> 1/p = (0+3)/(0+1)
+    assert 99 in got, "doc with only unseen bigrams vanished from output"
+    assert got[99]["n_bigrams"] == 1
+    assert got[99]["mean_inv_p"] == 3.0
+    assert got[99]["min_bigram_count"] == 0
+    # doc 100: (a,b) seen -> (1+3)/(1+1)=2.0; (b,x) unseen, c(b)=1 ->
+    # (1+3)/(0+1)=4.0; mean=3.0 with BOTH transitions counted
+    assert got[100]["n_bigrams"] == 2
+    assert got[100]["mean_inv_p"] == 3.0
+    assert got[100]["min_bigram_count"] == 0
+
+
+def test_self_trained_scores_unchanged_by_left_joins(spark):
+    """When the model is trained on the scored corpus itself (the
+    oracle queries' shape), every bigram is in the model and the left
+    joins must be row-identical to the old inner joins."""
+    from event_data_etl_gcs_spark.sources.catalog import load_table
+
+    docs = load_table(spark, SF, "documents").limit(50)
+    out = bigram_scores(docs)
+    assert out.count() > 0
+    # self-trained: every scored transition is in the model, so the
+    # coalesced cvw floor of 0 is never reached
+    assert out.filter(F.col("min_bigram_count") < 1).count() == 0

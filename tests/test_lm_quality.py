@@ -1,10 +1,17 @@
 """Semantics of the LM-based curation scores (beyond the exact oracle):
-bounds, pool exclusion, and the selection fraction."""
+bounds, pool exclusion, the selection fraction, and the DSIR scorer's
+running-window form."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from event_data_etl_gcs_spark.operators.dsir import (
+    bucket_counts,
+    ratio_table,
+    score_docs,
+    token_buckets,
+)
 from event_data_etl_gcs_spark.queries.lm_quality import (
     _dsir_weights,
     dsir_select_topfrac,
@@ -64,3 +71,44 @@ def test_dsir_topfrac_counts(spark):
 def test_dsir_weights_positive(spark):
     w = _dsir_weights(spark, SF)
     assert w.filter(F.col("mean_lr") <= 0.0).count() == 0
+
+
+def test_score_docs_window_form(spark):
+    """Round-13 restructure pin: the running-window score_docs must be
+    BIT-IDENTICAL to the original sort_array(collect_list) + fold form
+    (pos is unique per doc, ratios strictly positive, so the running
+    double sum visits the same order the array fold pinned)."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    tk = token_buckets(docs)
+    ratios = ratio_table(bucket_counts(tk))
+    got = {
+        (r["doc_id"], r["source"]): (r["n_tokens"], r["mean_lr"])
+        for r in score_docs(tk, ratios).collect()
+    }
+    legacy = (
+        tk.filter(~F.col("is_target"))
+        .join(F.broadcast(ratios), "h")
+        .select("doc_id", "source", "pos", "ratio")
+        .groupBy("doc_id", "source")
+        .agg(
+            F.count("*").alias("n_tokens"),
+            F.sort_array(F.collect_list(F.struct("pos", "ratio"))).alias("pr"),
+        )
+        .select(
+            "doc_id",
+            "source",
+            "n_tokens",
+            (
+                F.expr(
+                    "aggregate(transform(pr, p -> p.ratio), "
+                    "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+                )
+                / F.col("n_tokens").cast("double")
+            ).alias("mean_lr"),
+        )
+    )
+    want = {
+        (r["doc_id"], r["source"]): (r["n_tokens"], r["mean_lr"])
+        for r in legacy.collect()
+    }
+    assert got == want  # exact doubles, not approx

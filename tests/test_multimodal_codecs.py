@@ -12,6 +12,7 @@ from event_data_etl_gcs_spark.operators.multimodal import (
     _real_codecs_available,
     decode_real,
     decode_stub,
+    dhash_images,
     documents_as_media,
     real_codecs_enabled,
 )
@@ -271,3 +272,14 @@ def test_decode_real_nonimage_payload_keeps_row_with_stub_features(
     got = {r["media_id"]: r["features"] for r in decode_real(media, strict=True).collect()}
     want = {r["media_id"]: r["features"] for r in decode_stub(media).collect()}
     assert got == want and len(got) == 50
+
+
+def test_dhash_rejects_malformed_ppm(spark):
+    bad_magic = b"P5\n4 4\n255\n" + bytes(48)
+    truncated = b"P6\n4 4\n255\n" + bytes(10)  # expects 48 raster bytes
+    for payload in (bad_magic, truncated):
+        media = spark.createDataFrame(
+            [(1, bytearray(payload))], "media_id long, payload binary"
+        )
+        with pytest.raises(Exception, match="PPM"):
+            dhash_images(media).collect()

@@ -106,7 +106,6 @@ def test_pq_index_persist_append_rebuild_equivalence(spark, tmp_path):
     from event_data_etl_gcs_spark.operators.pq import (
         load_pq_index,
         pack_codes,
-        pq_append_batch,
         save_pq_index,
     )
 
@@ -127,7 +126,7 @@ def test_pq_index_persist_append_rebuild_equivalence(spark, tmp_path):
 
     # append == rebuild, bit-exact (packed form compared)
     appended = pack_codes(
-        want_old.unionByName(pq_append_batch(new, cb))
+        want_old.unionByName(encode_codes(new, cb))
     )
     rebuilt = pack_codes(encode_codes(emb, cb))
     assert appended.exceptAll(rebuilt).count() == 0
@@ -135,32 +134,8 @@ def test_pq_index_persist_append_rebuild_equivalence(spark, tmp_path):
 
     # search on the reloaded+appended index == search on in-memory codes
     queries = emb.filter(F.col("vec_id") < N_QUERY)
-    all_codes = want_old.unionByName(pq_append_batch(new, cb))
+    all_codes = want_old.unionByName(encode_codes(new, cb))
     got = adc_topk(emb, cb_loaded, all_codes, queries, k=K)
     want = adc_topk(emb, cb, encode_codes(emb, cb), queries, k=K)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
-def test_streaming_pq_ingest_matches_batch_encode(spark, tmp_path):
-    """The streamed PQ code table (file-source micro-batches appending
-    packed codes) must be bit-identical to a one-shot batch encode."""
-    from event_data_etl_gcs_spark.operators.pq import pack_codes
-    from event_data_etl_gcs_spark.streaming.neardedup import (
-        run_streaming_pq_ingest,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    emb_dir = str(tmp_path / "emb_stream")
-    emb.repartition(4).write.mode("overwrite").parquet(emb_dir)
-    cb = build_codebook(emb)
-    cb.cache().count()  # freeze before the stream consumes it
-
-    idx = str(tmp_path / "pq_idx")
-    run_streaming_pq_ingest(spark, emb_dir, idx, str(tmp_path / "ckpt"), cb)
-
-    got = spark.read.parquet(f"{idx}/codes")
-    want = pack_codes(encode_codes(emb, cb))
-    assert got.count() == emb.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

@@ -15,6 +15,8 @@ from event_data_etl_gcs_spark.operators.relational import argmax_latest
 from event_data_etl_gcs_spark.operators.temporal_joins import asof_join
 from event_data_etl_gcs_spark.operators.upsert import merge_upsert
 
+from .conftest import SF_SMOKE
+
 SETTINGS = settings(
     max_examples=12,
     deadline=None,
@@ -543,3 +545,52 @@ def test_zorder_interleave_bijective_and_monotone_blocks():
         """
     ).fetchone()
     assert spans[0] <= 15 and spans[1] <= 15
+
+
+def test_recursion_limit_restored_after_date_spine(spark):
+    from event_data_etl_gcs_spark.queries.gapfill import (
+        sql_recursive_date_spine,
+    )
+
+    before = spark.conf.get("spark.sql.cteRecursionLevelLimit")
+    out = sql_recursive_date_spine(spark, SF_SMOKE)
+    assert spark.conf.get("spark.sql.cteRecursionLevelLimit") == before
+    rows = out.collect()  # still executable after the restore
+    assert len(rows) >= 28 and all(r["n_events"] >= 0 for r in rows)
+
+
+def test_shard_hash_no_int64_overflow_at_huge_doc_id(spark):
+    """doc_id * 2654435761 wraps int64 above ~3.47e9 (Spark wraps
+    silently -> negative h, corrupted shard order). The reduced-operand
+    form must give the identical modular value, nonnegative, at any
+    doc_id — and match the unreduced value where it doesn't overflow."""
+    from event_data_etl_gcs_spark.queries.layout import (
+        SHARD_HASH_C,
+        SHARD_HASH_P,
+        hash_order_prefix_tokens,
+    )
+
+    big = 5_000_000_000
+    docs = spark.createDataFrame(
+        [(7, "a b c"), (123456, "x y"), (big, "t1 t2 t3 t4")],
+        "doc_id long, text string",
+    )
+    # recompute h the way hash_order_prefix_tokens does (its output drops
+    # h, so recompute through the same column expression)
+    t = docs.select(
+        "doc_id",
+        (
+            ((F.col("doc_id") % F.lit(SHARD_HASH_P))
+             * F.lit(SHARD_HASH_C % SHARD_HASH_P))
+            % F.lit(SHARD_HASH_P)
+        ).alias("h"),
+    )
+    got = {r["doc_id"]: r["h"] for r in t.collect()}
+    for d, h in got.items():
+        assert 0 <= h < SHARD_HASH_P
+        assert h == (d * SHARD_HASH_C) % SHARD_HASH_P  # exact math value
+    # and the full prefix-sum pipeline runs clean over the huge id
+    out = hash_order_prefix_tokens(docs)
+    rows = {r["doc_id"]: r["cum_before"] for r in out.collect()}
+    assert set(rows) == {7, 123456, big}
+    assert all(v >= 0 for v in rows.values())

@@ -1,6 +1,8 @@
 """Every script under scripts/ still finds what it imports from the
 package and from bench.py, so deleting or renaming a name cannot strand
-a script. Static (ast) walk plus a plain import; no Spark session."""
+a script. Static (ast) walk plus a plain import; no Spark session.
+Likewise every slow-tier entry in conftest names a test file that
+exists, so deleting or renaming a test file cannot leave a stale name."""
 
 from __future__ import annotations
 
@@ -54,3 +56,11 @@ def test_script_imports_resolve(script):
 def test_walk_sees_project_imports():
     found = {m for f in SCRIPT_FILES for m, _ in _project_imports(os.path.join(SCRIPTS, f))}
     assert {"bench", "event_data_etl_gcs_spark.queries"} <= found
+
+
+def test_slow_tier_files_exist():
+    from .conftest import SLOW_TIER_FILES
+
+    tests_dir = os.path.join(REPO, "tests")
+    missing = sorted(f for f in SLOW_TIER_FILES if not os.path.isfile(os.path.join(tests_dir, f)))
+    assert not missing, f"SLOW_TIER_FILES names files not in tests/: {missing}"

@@ -491,43 +491,3 @@ def test_containment_keep_policy_drops_contained_doc(spark):
         for r in get_query("dedup_containment_keep").fn(spark, d).collect()
     }
     assert got == {2, 3}
-
-
-def test_containment_incremental_union_equals_batch(spark):
-    """Union of incremental containment emissions over ANY batch split
-    equals the full-corpus build — exactness holds with frozen
-    at-arrival prefixes (prefix filtering is correct for any
-    valid-size subset, so the probe prefix never needs recomputing as
-    the corpus grows)."""
-    from pyspark.sql import functions as F
-
-    from event_data_etl_gcs_spark.operators.dedup import (
-        containment_incremental_pairs,
-        containment_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    want = sorted(
-        (r["id_a"], r["id_b"], r["containment"])
-        for r in containment_pairs(docs).collect()
-    )
-    assert want
-
-    sets = spark.createDataFrame([], "id LONG, s ARRAY<BIGINT>")
-    prefix = spark.createDataFrame([], "id LONG, h BIGINT")
-    got = []
-    for m in range(3):
-        batch = docs.filter(F.col("doc_id") % 3 == m)
-        pairs, new_sets, new_prefix = containment_incremental_pairs(
-            batch, sets, prefix
-        )
-        got.extend(
-            (r["id_a"], r["id_b"], r["containment"]) for r in pairs.collect()
-        )
-        # the caller's state append, materialized (in the streaming
-        # loop these are parquet appends)
-        sets = sets.unionByName(new_sets).localCheckpoint(eager=True)
-        prefix = prefix.unionByName(new_prefix).localCheckpoint(eager=True)
-
-    assert sorted(got) == want
-    assert len(got) == len(set(got)), "each ordered pair emitted once"

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from event_data_etl_gcs_spark.queries.quality_audit import (
     _orders_canonical,
+    gini_term_decimal,
     orders_partition_checksums,
 )
 from event_data_etl_gcs_spark.operators.validation import partition_checksums
@@ -49,3 +50,18 @@ def test_checksum_detects_single_value_change(spark):
     p = diffs[0]
     assert clean[p][0] == dirty[p][0]  # same row count, different digests
     assert clean[p][1] != dirty[p][1]
+
+
+def test_gini_term_exact_beyond_int64(spark):
+    """(2i - nk - 1) * c at 100 TB ranks/counts: the decimal form must
+    equal the exact python integer where a raw int64 product wraps."""
+    i, nk, c = 5_000_000_000, 5_000_000_000, 5_000_000_000
+    exact = (2 * i - nk - 1) * c
+    assert exact > 2**63  # the scenario the fix targets
+    df = spark.createDataFrame(
+        [(i, nk, c)], "i long, nk long, c long"
+    )
+    got = df.select(
+        F.sum(gini_term_decimal()).alias("s")
+    ).collect()[0]["s"]
+    assert int(got) == exact

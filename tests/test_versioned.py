@@ -158,3 +158,12 @@ def test_write_audit_publish(spark, tmp_path):
     # publishing a never-staged or out-of-order version refuses
     with pytest.raises(ValueError):
         publish_snapshot(table, v2 + 5)
+
+
+def test_vacuum_never_drops_current_version(spark, tmp_path):
+    tdir = str(tmp_path / "tbl")
+    for n in (2, 4, 6):
+        write_snapshot(spark.range(n).select(F.col("id").alias("v")), tdir)
+    dropped = vacuum_versions(tdir, keep_last=0)
+    assert 3 not in dropped  # current version survives keep_last=0
+    assert read_snapshot(spark, tdir).count() == 6
